@@ -205,10 +205,12 @@ def materialize(
 
         path = online_table_path(store_path, project, table_name)
         # Keyed layout: repartition by entity key (each output file covers
-        # one hash bucket of keys) and sort within partitions by key —
-        # parquet row-group min/max statistics on the key columns then let
-        # point lookups skip row groups inside each file, the poor-man's
-        # Z-ORDER.
+        # one hash bucket of keys) and sort within partitions by key, so
+        # each file's row groups carry tight min/max statistics on the
+        # key columns. No serving plan pushes a key predicate into the
+        # scan today (the online lookup is a broadcast semi join;
+        # the executed plan shows only `PushedFilters: [IsNotNull(<key>)]`),
+        # so point lookups get no row-group skipping from this layout yet.
         latest.repartition(
             *[F.col(k) for k in table.entities]
         ).sortWithinPartitions(*table.entities).write.mode(

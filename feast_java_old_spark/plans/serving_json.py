@@ -181,7 +181,7 @@ def serve_logged(
         "features": ",".join(str(r) for r in feature_refs),
         "entity_rows": n_req,
     }
-    t0 = _time.time()
+    t0 = _time.perf_counter()
     try:
         # Serving-side authorization on the request's project —
         # ServingServiceGRpcController.getOnlineFeaturesV2:86-91
@@ -232,7 +232,7 @@ def serve_logged(
             project,
             [str(r) for r in feature_refs],
             rows,
-            latency_s=_time.time() - t0,
+            latency_s=_time.perf_counter() - t0,
             entity_count=n_req if n_req >= 0 else None,
         )
     if audit is not None:

@@ -81,7 +81,7 @@ class CoreService:
         req = dict(request or {})
         if project is not None:
             req.setdefault("project", project)
-        t0 = _time.time()
+        t0 = _time.perf_counter()
         try:
             if authorize and project is not None:
                 self.auth.authorize_request(authentication, project)
@@ -91,7 +91,9 @@ class CoreService:
             if self.metrics is not None:
                 # MonitoringInterceptor.java:45-52 — the latency
                 # histogram observes on close with the FINAL status.
-                self.metrics.observe_call(method, code, _time.time() - t0)
+                self.metrics.observe_call(
+                    method, code, _time.perf_counter() - t0
+                )
             if self.audit is not None:
                 self.audit.log_message(
                     service=SERVICE_NAME,
@@ -103,7 +105,7 @@ class CoreService:
                 )
             raise
         if self.metrics is not None:
-            self.metrics.observe_call(method, "OK", _time.time() - t0)
+            self.metrics.observe_call(method, "OK", _time.perf_counter() - t0)
         if self.audit is not None:
             self.audit.log_message(
                 service=SERVICE_NAME,
@@ -230,15 +232,15 @@ class CoreService:
             return fn()
         import time as _time
 
-        t0 = _time.time()
+        t0 = _time.perf_counter()
         try:
             result = fn()
         except Exception as ex:
             self.metrics.observe_call(
-                method, grpc_status_code(ex), _time.time() - t0
+                method, grpc_status_code(ex), _time.perf_counter() - t0
             )
             raise
-        self.metrics.observe_call(method, "OK", _time.time() - t0)
+        self.metrics.observe_call(method, "OK", _time.perf_counter() - t0)
         return result
 
     def get_entity(self, name: str, project: str = DEFAULT_PROJECT):

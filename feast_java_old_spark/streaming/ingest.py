@@ -48,6 +48,28 @@ def _current_version_dir(path: str) -> Optional[str]:
     return vdir if os.path.isdir(vdir) else None
 
 
+def online_table_stamp(path: str) -> Optional[tuple]:
+    """Stamp of what :func:`read_online_table` would serve from a LOCAL
+    path: the served directory (the ``_LATEST`` version dir when there
+    is one, else the path itself) and every file under it as (relative
+    name, size, ``mtime_ns``). Re-materializing, a pointer flip or a
+    Delta commit all change it. ``None`` when there is nothing to stamp
+    (missing or empty dir, or a listing that raced a writer)."""
+    served = _current_version_dir(path) or path
+    files = []
+    try:
+        for root, _dirs, names in os.walk(served):
+            for name in names:
+                full = os.path.join(root, name)
+                st = os.stat(full)
+                files.append(
+                    (os.path.relpath(full, served), st.st_size, st.st_mtime_ns)
+                )
+    except OSError:
+        return None
+    return (served, tuple(sorted(files))) if files else None
+
+
 def read_online_table(
     spark: SparkSession, path: str, table_format: str = "parquet"
 ) -> Optional[DataFrame]:

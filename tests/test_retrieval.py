@@ -428,6 +428,199 @@ def test_null_component_of_compound_key_is_not_found(
     assert out[2]["m_sales__sales"] == 7
 
 
+# ------------------------------------------------- online-table cache:
+# the serving path keeps each local online table's relation and plan
+# between requests, keyed on a stamp of the served directory's listing
+# and on the spec. Every change a live deployment can make between two
+# requests must be served by the next one, through one controller.
+
+
+def _controller(spark, reg, store):
+    from feast_java_old_spark.plans.serving_rest import (
+        ServingServiceRestController,
+    )
+
+    return ServingServiceRestController(spark, reg, store, request_ts=TS)
+
+
+def _serve(ctl, rows, refs):
+    return [r.asDict() for r in ctl.retrieve(refs, rows, "default").collect()]
+
+
+def test_cache_serves_rematerialized_values(spark, rides_env):
+    reg, store = rides_env
+    ctl = _controller(spark, reg, store)
+    rows = [{"driver_id": 1}, {"driver_id": 4}]
+    first = _serve(ctl, rows, ["rides:trip_cost"])
+    assert [r["rides__trip_cost"] for r in first] == [5, None]
+
+    spec = reg.get_feature_table("rides")
+    spark.createDataFrame(
+        [(1, ts(10), 11, 1.0, None, "x"), (4, ts(10), 44, 4.0, None, "y")],
+        "driver_id long, ts timestamp, trip_cost long, trip_distance double,"
+        " trip_empty double, trip_wrong_type string",
+    ).write.mode("overwrite").parquet(spec.batch_source.file_url)
+    materialize(spark, reg, "rides", store)
+    second = _serve(ctl, rows, ["rides:trip_cost"])
+    assert [r["rides__trip_cost"] for r in second] == [11, 44]
+    assert [r["rides__trip_cost__status"] for r in second] == ["PRESENT"] * 2
+
+
+def test_cache_serves_streaming_pointer_flip(spark, rides_env, tmp_path):
+    from feast_java_old_spark.operators.materialize import online_table_path
+    from feast_java_old_spark.streaming.ingest import merge_latest_batch
+
+    reg, store = rides_env
+    vstore = str(tmp_path / "vstore")
+    vpath = online_table_path(vstore, "default", "rides")
+    current = spark.read.parquet(online_table_path(store, "default", "rides"))
+    merge_latest_batch(spark, current, vpath, ["driver_id"], batch_id=0)
+    ctl = _controller(spark, reg, vstore)
+    assert _serve(ctl, [{"driver_id": 1}], ["rides:trip_cost"])[0][
+        "rides__trip_cost"
+    ] == 5
+
+    newer = current.where("driver_id = 1").selectExpr(
+        "driver_id", "event_timestamp + INTERVAL 50 SECONDS AS event_timestamp",
+        "CAST(77 AS BIGINT) AS trip_cost", "trip_distance", "trip_empty",
+        "trip_wrong_type",
+    )
+    merge_latest_batch(spark, newer, vpath, ["driver_id"], batch_id=1)
+    out = _serve(ctl, [{"driver_id": 1}], ["rides:trip_cost"])
+    assert out[0]["rides__trip_cost"] == 77
+
+
+def test_cache_serves_table_materialized_after_first_request(
+    spark, rides_env, tmp_path
+):
+    reg, store = rides_env
+    src = str(tmp_path / "late_src")
+    spark.createDataFrame(
+        [(1, ts(50), 42.0)], "driver_id long, ts timestamp, rating double"
+    ).write.parquet(src)
+    reg.apply_feature_table(
+        FeatureTable(
+            "driver_stats", ["driver_id"], [Feature("rating", ValueType.DOUBLE)],
+            batch_source=FileSource(file_url=src, event_timestamp_column="ts"),
+        )
+    )
+    ctl = _controller(spark, reg, store)
+    refs = ["rides:trip_cost", "driver_stats:rating"]
+    before = _serve(ctl, [{"driver_id": 1}], refs)[0]
+    assert before["driver_stats__rating__status"] == "NOT_FOUND"
+    assert before["rides__trip_cost"] == 5
+
+    materialize(spark, reg, "driver_stats", store)
+    after = _serve(ctl, [{"driver_id": 1}], refs)[0]
+    assert after["driver_stats__rating"] == 42.0
+    assert after["driver_stats__rating__status"] == "PRESENT"
+
+
+def test_cache_serves_reapplied_spec_without_rematerialize(spark, rides_env):
+    import dataclasses
+
+    reg, store = rides_env
+    ctl = _controller(spark, reg, store)
+    refs = ["rides:trip_cost", "rides:trip_extra"]
+    before = _serve(ctl, [{"driver_id": 1}], refs)[0]
+    assert before["rides__trip_cost__status"] == "PRESENT"
+    assert before["rides__trip_extra__status"] == "NOT_FOUND"  # unregistered
+
+    spec = reg.get_feature_table("rides")
+    added = dataclasses.replace(
+        spec, features=[*spec.features, Feature("trip_extra", ValueType.INT32)]
+    )
+    reg.apply_feature_table(added)
+    after_add = _serve(ctl, [{"driver_id": 1}], refs)[0]
+    assert after_add["rides__trip_cost"] == 5
+    # registered now and the key is found, but no value is stored yet
+    assert after_add["rides__trip_extra__status"] == "NULL_VALUE"
+
+    reg.apply_feature_table(dataclasses.replace(added, max_age_secs=50))
+    after_age = _serve(ctl, [{"driver_id": 1}], refs)[0]
+    assert after_age["rides__trip_cost"] is None  # the stored row is 100 s old
+    assert after_age["rides__trip_cost__status"] == "OUTSIDE_MAX_AGE"
+
+
+def test_cache_shared_by_concurrent_requests(spark, rides_env):
+    """Serving threads share the cache: more threads than cores, racing
+    on a cold entry with different request shapes, all answer right."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    reg, store = rides_env
+    ctl = _controller(spark, reg, store)
+    rows = [{"driver_id": d} for d in (1, 2, 3)]
+    expected = {
+        "trip_cost": ([5, None, None], "PRESENT"),
+        "trip_distance": ([3.5, None, None], "PRESENT"),
+        "trip_empty": ([None, None, None], "NULL_VALUE"),
+    }
+    shapes = [
+        ["trip_cost"], ["trip_distance"], ["trip_empty", "trip_cost"],
+        ["trip_distance", "trip_empty"],
+    ]
+
+    def one(i):
+        names = shapes[i % len(shapes)]
+        out = _serve(ctl, rows, [f"rides:{n}" for n in names])
+        for n in names:
+            values, first_status = expected[n]
+            assert [r[f"rides__{n}"] for r in out] == values
+            assert [r[f"rides__{n}__status"] for r in out] == [
+                first_status, "NOT_FOUND", "OUTSIDE_MAX_AGE",
+            ]
+        return True
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            futures = [pool.submit(one, i) for i in range(16)]
+            assert all(f.result(timeout=120) for f in futures)
+    finally:
+        sys.setswitchinterval(old)
+
+
+def test_list_request_plan_has_no_exchange_and_bounded_jobs(
+    spark, rides_env, tmp_path
+):
+    """A driver-side request over two tables plans as broadcasts only:
+    no hash or range exchange. Its collect runs one key-set broadcast
+    job (both tables join on ``driver_id``, so Spark reuses it), one
+    scan broadcast job per table and the result job: the key set is a
+    semi join's build side, which needs no ``distinct``, and the order
+    is restored by a one-partition local sort."""
+    reg, store = rides_env
+    src = str(tmp_path / "src2")
+    spark.createDataFrame(
+        [(1, ts(50), 42.0)], "driver_id long, ts timestamp, rating double"
+    ).write.parquet(src)
+    reg.apply_feature_table(
+        FeatureTable(
+            "driver_stats", ["driver_id"], [Feature("rating", ValueType.DOUBLE)],
+            batch_source=FileSource(file_url=src, event_timestamp_column="ts"),
+        )
+    )
+    materialize(spark, reg, "driver_stats", store)
+    rows = [{"driver_id": d} for d in (3, 1, 2, 1)]
+    refs = ["rides:trip_cost", "driver_stats:rating"]
+    fetch(spark, reg, store, rows, refs)  # warm the online-table cache
+
+    tracker = spark.sparkContext.statusTracker()
+    first = max(tracker.getJobIdsForGroup(None), default=-1) + 1
+    df = get_online_features(spark, reg, rows, refs, store, request_ts=TS)
+    out = [r.asDict() for r in df.collect()]
+    last = max(tracker.getJobIdsForGroup(None), default=-1)
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "hashpartitioning" not in plan
+    assert "rangepartitioning" not in plan
+    assert last - first + 1 <= 1 + 2 + 1
+    assert [r["driver_id"] for r in out] == [3, 1, 2, 1]
+    assert [r["driver_stats__rating"] for r in out] == [None, 42.0, None, 42.0]
+
+
 # ---------------------------------------------------------------- r16 opt:
 # Arrow request-frame fast path (guide §4/§6 — one Arrow batch instead of a
 # pickled-Python RDD). The fast path must be invisible except in speed:
