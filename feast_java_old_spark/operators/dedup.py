@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import warnings
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -901,6 +902,12 @@ def simhash(
     return sums.select("doc_id", bitstr.alias("simhash"))
 
 
+# How long a connected-components round waits for its observed change
+# count after its checkpoint job (the listener bus delivers it, normally
+# within milliseconds); past it the round counts with one more job.
+_OBSERVATION_WAIT_MS = 10_000
+
+
 def dedup_components(
     pairs: DataFrame,
     ids: DataFrame,
@@ -969,6 +976,11 @@ def dedup_components(
     labels = ids.select(
         F.col(id_col).alias("node"), F.col(id_col).alias("label")
     )
+    jvm = pairs.sparkSession._jvm
+    await_ = jvm.scala.concurrent.Await
+    wait = jvm.scala.concurrent.duration.Duration.create(
+        _OBSERVATION_WAIT_MS, "ms"
+    )
     converged = False
     for _round in range(max_iterations):
         neighbor_min = (
@@ -1013,7 +1025,13 @@ def dedup_components(
             new_labels = observed.checkpoint(eager=True)
         else:
             new_labels = observed.localCheckpoint(eager=True)
-        changed = int(obs.get["n"])
+        try:  # not obs.get, which would wait for good
+            changed = await_.result(obs._jo.future(), wait).getLong(0)
+        except Py4JJavaError as ex:
+            name = ex.java_exception.getClass().getName()
+            if name != "java.util.concurrent.TimeoutException":
+                raise
+            changed = new_labels.where("__changed").limit(1).count()
         labels = new_labels.drop("__changed")
         if changed == 0:
             converged = True

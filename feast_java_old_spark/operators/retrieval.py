@@ -36,12 +36,14 @@ and sorting it locally (driver-side rows) or by a global sort
 (DataFrame requests, ``strategy="shuffle"``).
 
 A local online table's relation (its parquet schema is inferred once)
-and the per-spec projection and output Columns built on it are cached
-between requests, keyed on a stamp of the served directory's listing
-(:func:`_cached_table_plan`). A 10-row request over two tables is then
-at most five Spark jobs: a key-set broadcast per distinct set of join
-keys (Spark reuses it across tables with the same keys), a scan
-broadcast per table, and the result.
+comes from the process-wide relation cache in ``sources.tables``
+(:func:`~feast_java_old_spark.sources.tables.cached_relation`), which
+rebuilds it when a stamp of the served directory's files changes. The
+per-spec projection and output Columns built on a relation are kept
+with it (:func:`_cached_table_plan`). A 10-row request over two tables
+is then at most five Spark jobs: a key-set broadcast per distinct set
+of join keys (Spark reuses it across tables with the same keys), a
+scan broadcast per table, and the result.
 
 A plain ``request.join(online, keys, "left")`` would force Spark to
 shuffle the online table (a left join cannot broadcast its preserved
@@ -52,6 +54,7 @@ from __future__ import annotations
 
 import datetime as dt
 import threading
+import weakref
 from typing import Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -62,6 +65,7 @@ from feast_java_old_spark.operators.materialize import online_table_path
 from feast_java_old_spark.registry.model import FeatureTable
 from feast_java_old_spark.registry.registry import Registry
 from feast_java_old_spark.registry.validation import validate_online_request
+from feast_java_old_spark.sources.tables import cached_relation
 
 STATUS_PRESENT = "PRESENT"
 STATUS_NOT_FOUND = "NOT_FOUND"
@@ -284,95 +288,50 @@ def _table_plan(
     return pruned, names, cols
 
 
-class _OnlineEntry:
-    """A local online table as last read: the relation, the listing
-    stamp it was read under, and the per-request-shape plans built on
-    it (see :func:`_cached_table_plan`)."""
-
-    __slots__ = ("spark", "stamp", "online", "plans")
-
-    def __init__(self, spark, stamp, online) -> None:
-        self.spark = spark
-        self.stamp = stamp
-        self.online = online
-        self.plans: dict = {}
-
-
-# Local online-table path → _OnlineEntry, shared by every serving entry
-# point in the process (they reach get_online_features with no common
-# owner object); an entry is used only under the same session and
-# listing stamp. Both levels are bounded; the oldest insertion goes first.
-_online_cache: dict[str, _OnlineEntry] = {}
-_online_cache_lock = threading.Lock()
-_MAX_CACHED_TABLES = 256
+# Per-shape plans built on an online relation, keyed by that relation: a
+# new relation (re-materialize, pointer flip) starts with no plans, and a
+# relation's plans go when the relation cache drops it.
+_plans: "weakref.WeakKeyDictionary[DataFrame, dict]" = weakref.WeakKeyDictionary()
+_plans_lock = threading.Lock()
 _MAX_PLANS_PER_TABLE = 32
 
 
 def _cached_table_plan(
-    spark: SparkSession,
-    path: str,
+    online: Optional[DataFrame],
     table_name: str,
     spec: FeatureTable,
     trefs: Sequence[FeatureRef],
     full_feature_names: bool,
     include_statuses: bool,
 ) -> tuple[Optional[DataFrame], list[str], list[Column]]:
-    """:func:`_table_plan` over the online table at ``path``, reusing
-    the relation and the plan across requests while the served
-    directory's listing stamp is unchanged.
+    """:func:`_table_plan`, reused while ``online`` is the same relation.
 
-    Re-inferring an unchanged table's parquet schema costs a Spark job
-    per table per request, which at serving sizes is most of the
-    request. The stamp (``online_table_stamp``: the ``_LATEST`` version
-    dir or the path, and every file's name, size and mtime) is checked
-    on every request, so a re-materialize, a streaming pointer flip or
-    a late first materialize is served at once. Plans are keyed by the
-    whole spec too, so a re-applied spec (new ``max_age``, added
-    feature) is served without re-materializing. Caching the plans, not
-    only the relation, saves rebuilding the projection and Columns
-    through py4j on every request: measured about 100 ms of a 520 ms
-    10-row, two-table request on 4 CPUs. A never-materialized read
-    (``None``) and remote URIs are not cached."""
-    from feast_java_old_spark.streaming.ingest import (
-        online_table_stamp,
-        read_online_table,
-    )
-
-    stamp = online_table_stamp(path) if "://" not in path else None
-    if stamp is None:
+    A local online table's relation comes from ``cached_relation``, which
+    returns a new one after a re-materialize, a pointer flip or a late
+    first materialize. Plans are keyed by the whole spec too, so a
+    re-applied spec is served without re-materializing. Caching plans
+    saves rebuilding the projection and Columns through py4j on every
+    request: measured about 100 ms of a 520 ms 10-row, two-table request
+    on 4 CPUs."""
+    if online is None:
         return _table_plan(
-            read_online_table(spark, path), table_name, spec, trefs,
-            full_feature_names, include_statuses,
+            None, table_name, spec, trefs, full_feature_names, include_statuses
         )
-    with _online_cache_lock:
-        entry = _online_cache.get(path)
-    if entry is None or entry.stamp != stamp or entry.spark is not spark:
-        online = read_online_table(spark, path)
-        if online is None:
-            return _table_plan(
-                None, table_name, spec, trefs,
-                full_feature_names, include_statuses,
-            )
-        entry = _OnlineEntry(spark, stamp, online)
-        with _online_cache_lock:
-            _online_cache.pop(path, None)
-            if len(_online_cache) >= _MAX_CACHED_TABLES:
-                _online_cache.pop(next(iter(_online_cache)))
-            _online_cache[path] = entry
-    # Every argument of _table_plan but the relation and the table name
-    # (both fixed by the entry); the whole spec goes in through its repr
-    # so no field it reads can be left out of the key.
+    # Every argument of _table_plan but the relation (the memo's key) and
+    # the table name (in the spec and the refs); the whole spec goes in
+    # through its repr so no field it reads can be left out of the key.
     shape = (repr(spec), tuple(trefs), full_feature_names, include_statuses)
-    plan = entry.plans.get(shape)
+    with _plans_lock:
+        plans = _plans.setdefault(online, {})
+        plan = plans.get(shape)
     if plan is None:
         plan = _table_plan(
-            entry.online, table_name, spec, trefs,
-            full_feature_names, include_statuses,
+            online, table_name, spec, trefs, full_feature_names, include_statuses
         )
-        with _online_cache_lock:
-            if len(entry.plans) >= _MAX_PLANS_PER_TABLE:
-                entry.plans.pop(next(iter(entry.plans)))
-            entry.plans[shape] = plan
+        with _plans_lock:
+            if len(plans) >= _MAX_PLANS_PER_TABLE:
+                plans.pop(next(iter(plans)))
+            plans[shape] = plan
     return plan
 
 
@@ -417,20 +376,20 @@ def get_online_features(
     # dict-row inputs need hints — a DataFrame input already carries
     # its schema, so skip the registry lookups entirely there.
     type_hints: dict = {}
+    specs: dict[str, FeatureTable] = {}
     if local_rows:
         for table in {r.table for r in refs}:
             try:
-                for ent in registry.get_feature_table(
-                    table, project
-                ).entities:
-                    try:
-                        type_hints[ent] = registry.get_entity(
-                            ent, project
-                        ).value_type.to_spark()
-                    except KeyError:
-                        pass
+                specs[table] = registry.get_feature_table(table, project)
             except KeyError:
-                pass  # unknown table errors downstream with its message
+                continue  # unknown table errors downstream with its message
+            for ent in specs[table].entities:
+                try:
+                    type_hints[ent] = registry.get_entity(
+                        ent, project
+                    ).value_type.to_spark()
+                except KeyError:
+                    pass
         from pyspark.sql import types as _T
 
         type_hints.setdefault("event_timestamp", _T.TimestampType())
@@ -470,7 +429,9 @@ def get_online_features(
     value_cols: list[str] = []
 
     for table_name, trefs in by_table.items():
-        spec: FeatureTable = registry.get_feature_table(table_name, project)
+        spec = specs.get(table_name) or registry.get_feature_table(
+            table_name, project
+        )
         keys = list(spec.entities)
         missing = [k for k in keys if k not in request.columns]
         if missing:
@@ -481,24 +442,29 @@ def get_online_features(
         if online_frames is not None and table_name in online_frames:
             # In-memory online view (e.g. freshly materialized this session)
             # — same plan, no parquet round-trip.
-            pruned, names, cols = _table_plan(
-                online_frames[table_name], table_name, spec, trefs,
-                full_feature_names, include_statuses,
-            )
+            online = online_frames[table_name]
         elif store_path is not None:
+            from feast_java_old_spark.streaming.ingest import (
+                current_version_dir,
+                read_online_table,
+            )
+
             # read_online_table handles both the bare-parquet batch layout
             # and the versioned (vNNN + _LATEST pointer) streaming layout;
             # it returns None only for a never-materialized path and lets
-            # real read errors (corruption, permissions) propagate.
-            pruned, names, cols = _cached_table_plan(
-                spark, online_table_path(store_path, project, table_name),
-                table_name, spec, trefs, full_feature_names, include_statuses,
+            # real read errors (corruption, permissions) propagate. The
+            # relation is cached per served directory.
+            path = online_table_path(store_path, project, table_name)
+            online = cached_relation(
+                spark,
+                current_version_dir(path) or path,
+                lambda: read_online_table(spark, path),
             )
         else:
-            pruned, names, cols = _table_plan(
-                None, table_name, spec, trefs,
-                full_feature_names, include_statuses,
-            )
+            online = None
+        pruned, names, cols = _cached_table_plan(
+            online, table_name, spec, trefs, full_feature_names, include_statuses
+        )
 
         joined = out
         if pruned is not None and strategy == "shuffle":

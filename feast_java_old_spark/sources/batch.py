@@ -13,13 +13,15 @@ Scale notes: the reader stays fully declarative — `spark.read.parquet`
 gives pushdown/pruning; renames and casts are Catalyst projections that
 fuse into the scan's whole-stage-codegen span. Nothing here materializes
 or collects.
+
+A local file source is read through ``sources.tables.cached_relation``,
+so its schema inference, field mapping and timestamp normalization run
+once per change of its files, not once per ``materialize`` or export.
 """
 
 from __future__ import annotations
 
-from typing import Optional
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from feast_java_old_spark.registry.model import (
     BigQuerySource,
@@ -27,6 +29,7 @@ from feast_java_old_spark.registry.model import (
     FileSource,
 )
 from feast_java_old_spark.sources.tables import (
+    cached_relation,
     ensure_nanos_conf,
     normalize_timestamp_cols,
 )
@@ -39,72 +42,70 @@ def apply_field_mapping(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
     return df.withColumnsRenamed(mapping)
 
 
-def read_batch_source(
-    spark: SparkSession,
-    source: DataSource,
-    where: Optional[Column] = None,
-) -> DataFrame:
-    """Read a batch source into a DataFrame with field mapping applied.
-
-    ``where`` is pushed before the rename so that predicates on raw
-    source columns can reach the parquet scan (Catalyst pushes it down
-    regardless, but keeping the plan shallow helps `.explain` clarity).
-    """
+def read_batch_source(spark: SparkSession, source: DataSource) -> DataFrame:
+    """Read a batch source into a DataFrame with field mapping applied
+    and its declared timestamp columns normalized."""
     ensure_nanos_conf(spark)
     if isinstance(source, FileSource):
-        fmt = source.file_format.lower()
-        if fmt == "parquet":
-            df = spark.read.parquet(source.file_url)
-        elif fmt == "csv":
-            r = spark.read.option("header", "true")
-            df = (
-                r.schema(source.schema_ddl).csv(source.file_url)
-                if source.schema_ddl
-                # inference pays a second scan — dev-only; declare
-                # schema_ddl for anything at scale.
-                else r.option("inferSchema", "true").csv(source.file_url)
-            )
-        elif fmt == "json":
-            df = (
-                spark.read.schema(source.schema_ddl).json(source.file_url)
-                if source.schema_ddl
-                else spark.read.json(source.file_url)
-            )
-        elif fmt == "orc":
-            # Columnar like parquet: pushdown/pruning come for free.
-            df = spark.read.orc(source.file_url)
-        elif fmt == "avro":
-            # Row-oriented interchange format (the reference's stream
-            # payload codec, KafkaSerialization.java:31-68, as a batch
-            # file); needs the spark-avro package on the classpath.
-            try:
-                df = spark.read.format("avro").load(source.file_url)
-            except Exception as ex:  # pragma: no cover - env-dependent
-                raise RuntimeError(
-                    "avro batch source requires spark-avro on the "
-                    "classpath"
-                ) from ex
-        else:
-            raise ValueError(f"unsupported file format {source.file_format!r}")
-    elif isinstance(source, BigQuerySource):
+        return cached_relation(
+            spark,
+            source.file_url,
+            lambda: _conform(_read_file(spark, source), source, source.file_url),
+            key=repr(source),
+        )
+    if isinstance(source, BigQuerySource):
         # The BigQuery DSv2 connector is not present in this environment;
         # the standard OSS wiring would be
         # spark.read.format("bigquery").option("table", ref).load().
         # A parquet stand-in keyed by the table ref lets tests exercise the
         # source abstraction end-to-end.
         stand_in = source.table_ref.replace(":", "/").replace(".", "/")
-        df = spark.read.parquet(stand_in)
-    else:
-        raise TypeError(f"not a batch source: {type(source).__name__}")
-    if where is not None:
-        df = df.where(where)
+        return _conform(spark.read.parquet(stand_in), source, source.table_ref)
+    raise TypeError(f"not a batch source: {type(source).__name__}")
+
+
+def _read_file(spark: SparkSession, source: FileSource) -> DataFrame:
+    fmt = source.file_format.lower()
+    if fmt == "parquet":
+        return spark.read.parquet(source.file_url)
+    if fmt == "csv":
+        r = spark.read.option("header", "true")
+        return (
+            r.schema(source.schema_ddl).csv(source.file_url)
+            if source.schema_ddl
+            # inference pays a second scan — dev-only; declare
+            # schema_ddl for anything at scale.
+            else r.option("inferSchema", "true").csv(source.file_url)
+        )
+    if fmt == "json":
+        return (
+            spark.read.schema(source.schema_ddl).json(source.file_url)
+            if source.schema_ddl
+            else spark.read.json(source.file_url)
+        )
+    if fmt == "orc":
+        # Columnar like parquet: pushdown/pruning come for free.
+        return spark.read.orc(source.file_url)
+    if fmt == "avro":
+        # Row-oriented interchange format (the reference's stream
+        # payload codec, KafkaSerialization.java:31-68, as a batch
+        # file); needs the spark-avro package on the classpath.
+        try:
+            return spark.read.format("avro").load(source.file_url)
+        except Exception as ex:  # pragma: no cover - env-dependent
+            raise RuntimeError(
+                "avro batch source requires spark-avro on the classpath"
+            ) from ex
+    raise ValueError(f"unsupported file format {source.file_format!r}")
+
+
+def _conform(df: DataFrame, source: DataSource, cache_key: str) -> DataFrame:
     # The source's declared timestamp columns may arrive as LONG nanos
     # (nanosAsLong) or TIMESTAMP_NTZ — normalize to µs TimestampType here so
     # every downstream path sees one timestamp type. Checked on both the raw
     # and mapped names (field_mapping may rename the timestamp column).
     ts_cols = (source.event_timestamp_column, source.created_timestamp_column)
-    ck = getattr(source, "file_url", None) or getattr(source, "table_ref", None)
-    df = normalize_timestamp_cols(df, *ts_cols, cache_key=ck)
+    df = normalize_timestamp_cols(df, *ts_cols, cache_key=cache_key)
     df = apply_field_mapping(df, source.field_mapping)
     mapped = [source.field_mapping.get(c, c) for c in ts_cols if c]
-    return normalize_timestamp_cols(df, *mapped, cache_key=ck)
+    return normalize_timestamp_cols(df, *mapped, cache_key=cache_key)

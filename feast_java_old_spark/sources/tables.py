@@ -8,11 +8,17 @@ column arrives as a nanosecond LONG. :func:`load_table` normalizes it back
 to a microsecond TimestampType with integer division (`ts div 1000`, no
 double round-trip → no precision loss), which matches DuckDB's ns→µs
 truncation bit-for-bit, so oracle hashes line up.
+
+:func:`path_stamp` and :func:`cached_relation` decide, for every local
+read (batch sources and online tables), whether a path has changed
+since its relation was built.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -137,46 +143,72 @@ _UNIT_BANDS = (
 )
 _US_FACTOR = {"s": 1_000_000, "ms": 1_000, "us": 1, "ns": None}  # ns divides
 
-# (cache_key, path-stamp, column) -> inferred unit, so repeated
+def path_stamp(path: str) -> Optional[tuple]:
+    """Every file under the LOCAL ``path`` (or the path itself, when it
+    is a file) as (relative name, size, ``mtime_ns``), so any rewrite at
+    any depth moves it. ``None`` for a missing path, an empty directory
+    or a listing that raced a writer."""
+    files = []
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return (("", st.st_size, st.st_mtime_ns),)
+        for root, _dirs, names in os.walk(path):
+            for name in names:
+                full = os.path.join(root, name)
+                st = os.stat(full)
+                files.append(
+                    (os.path.relpath(full, path), st.st_size, st.st_mtime_ns)
+                )
+    except OSError:
+        return None
+    return tuple(sorted(files)) or None
+
+
+# (path, key) -> (session, stamp, relation), shared by every reader in
+# the process; the oldest insertion goes first past the bound.
+_relations: dict[tuple[str, object], tuple] = {}
+_relations_lock = threading.Lock()
+_MAX_RELATIONS = 256
+
+
+def cached_relation(
+    spark: SparkSession,
+    path: str,
+    build: Callable[[], Optional[DataFrame]],
+    key: object = None,
+) -> Optional[DataFrame]:
+    """``build()``, reused while :func:`path_stamp` of ``path`` and the
+    session are unchanged: reading an unchanged parquet directory again
+    pays a schema-inference Spark job. The stamp is taken before
+    ``build`` runs, so a rewrite during or after it is read by the next
+    call. ``key`` separates relations built differently over one path.
+    Remote URIs, a ``None`` stamp and a ``None`` result are not cached."""
+    stamp = path_stamp(path) if "://" not in path else None
+    if stamp is None:
+        return build()
+    slot = (path, key)
+    with _relations_lock:
+        hit = _relations.get(slot)
+    if hit is not None and hit[0] is spark and hit[1] == stamp:
+        return hit[2]
+    relation = build()
+    if relation is not None:
+        with _relations_lock:
+            _relations.pop(slot, None)
+            if len(_relations) >= _MAX_RELATIONS:
+                _relations.pop(next(iter(_relations)))
+            _relations[slot] = (spark, stamp, relation)
+    return relation
+
+
+# (cache_key, path_stamp, column) -> inferred unit, so repeated
 # load_table calls on the same parquet file never re-run the inference
-# scan.  The stamp (mtime_ns, size) of the path invalidates the entry
-# when the same path is REWRITTEN with data in a different epoch unit
-# within one process (overwrite in tests/notebooks) — a stale unit
-# would silently misdecode every timestamp by 1000x.
-_EPOCH_UNIT_CACHE: dict[tuple[str, tuple[int, int], str], str] = {}
-
-
-def _path_stamp(path: str) -> tuple[int, int]:
-    """Content stamp of ``path``; (0, 0) for non-filesystem keys (e.g. a
-    BigQuery table ref).  For a single file, (mtime_ns, size).  For a
-    DIRECTORY dataset the directory's own stat is NOT enough: a
-    same-name overwrite (``mode="overwrite"`` with identical part-file
-    names) keeps the entry set — and therefore the dir st_size — constant,
-    and dir mtime can be coarse, so a rewrite with data in a different
-    epoch unit could serve a stale cached unit and misdecode every
-    timestamp by 1000x (ADVICE r6).  Instead fold every child entry's
-    (name, mtime_ns, size) into the stamp, so any part-file rewrite,
-    addition, or removal moves it."""
-    try:
-        st = os.stat(path)
-    except OSError:
-        return (0, 0)
-    if not os.path.isdir(path):
-        return (st.st_mtime_ns, st.st_size)
-    h = 0
-    total = 0
-    try:
-        with os.scandir(path) as it:
-            for e in it:
-                try:
-                    cst = e.stat()
-                except OSError:
-                    continue
-                h ^= hash((e.name, cst.st_mtime_ns, cst.st_size))
-                total += cst.st_size
-    except OSError:
-        return (st.st_mtime_ns, st.st_size)
-    return (h, total)
+# scan. The stamp invalidates the entry when the same path is REWRITTEN
+# with data in a different epoch unit within one process (overwrite in
+# tests/notebooks) — a stale unit would silently misdecode every
+# timestamp by 1000x.
+_EPOCH_UNIT_CACHE: dict[tuple[str, Optional[tuple], str], str] = {}
 
 
 def _infer_unit(max_abs: int) -> str:
@@ -190,7 +222,7 @@ def _epoch_to_us_expr(df: DataFrame, name: str, cache_key: str | None):
     """Column-level epoch→µs conversion: infer the unit once from
     ``max(abs(v))`` (cached), warn on values outside the inferred
     unit's unambiguous 1976–8300 band."""
-    key = (cache_key, _path_stamp(cache_key), name) if cache_key else None
+    key = (cache_key, path_stamp(cache_key), name) if cache_key else None
     unit = _EPOCH_UNIT_CACHE.get(key) if key else None
     if unit is None:
         row = df.agg(

@@ -38,7 +38,8 @@ from feast_java_old_spark.operators.text import tokens
 _POINTER = "_LATEST"
 
 
-def _current_version_dir(path: str) -> Optional[str]:
+def current_version_dir(path: str) -> Optional[str]:
+    """The live ``_LATEST`` version dir under a local ``path``, or None."""
     ptr = os.path.join(path, _POINTER)
     if not os.path.exists(ptr):
         return None
@@ -46,28 +47,6 @@ def _current_version_dir(path: str) -> Optional[str]:
         v = f.read().strip()
     vdir = os.path.join(path, v)
     return vdir if os.path.isdir(vdir) else None
-
-
-def online_table_stamp(path: str) -> Optional[tuple]:
-    """Stamp of what :func:`read_online_table` would serve from a LOCAL
-    path: the served directory (the ``_LATEST`` version dir when there
-    is one, else the path itself) and every file under it as (relative
-    name, size, ``mtime_ns``). Re-materializing, a pointer flip or a
-    Delta commit all change it. ``None`` when there is nothing to stamp
-    (missing or empty dir, or a listing that raced a writer)."""
-    served = _current_version_dir(path) or path
-    files = []
-    try:
-        for root, _dirs, names in os.walk(served):
-            for name in names:
-                full = os.path.join(root, name)
-                st = os.stat(full)
-                files.append(
-                    (os.path.relpath(full, served), st.st_size, st.st_mtime_ns)
-                )
-    except OSError:
-        return None
-    return (served, tuple(sorted(files))) if files else None
 
 
 def read_online_table(
@@ -144,7 +123,7 @@ def read_online_table(
         if not _is_delta_table(spark, path, remote=not is_local):
             return None
         return spark.read.format("delta").load(path)
-    vdir = _current_version_dir(probe_path) if is_local else None
+    vdir = current_version_dir(probe_path) if is_local else None
     try:
         out = spark.read.parquet(vdir if vdir else path)
     except AnalysisException as ex:

@@ -441,14 +441,14 @@ def test_epoch_unit_cache_invalidates_on_directory_rewrite(spark, tmp_path):
     parquet DIRECTORY is overwritten in place with data in a different
     unit (ADVICE r6): a same-name overwrite keeps the directory's own
     entry set — so dir st_size is constant and dir mtime can be coarse —
-    but the child part files' stamps move, and _path_stamp folds those
+    but the child part files' stamps move, and path_stamp folds those
     in. A stale unit here misdecodes every timestamp by 1000x (the
     round-2 red-row class)."""
     import shutil
 
     from feast_java_old_spark.sources.tables import (
-        _path_stamp,
         normalize_timestamp_cols,
+        path_stamp,
     )
 
     us = 1706000000123456
@@ -461,7 +461,7 @@ def test_epoch_unit_cache_invalidates_on_directory_rewrite(spark, tmp_path):
         spark.read.parquet(path), "ts", cache_key=path
     )
     assert df1.select(F.unix_micros("ts")).first()[0] == us
-    stamp1 = _path_stamp(path)
+    stamp1 = path_stamp(path)
 
     # Rewrite the SAME directory with the same instant in MILLIS. Write
     # to a scratch dir and move the part files over so the directory's
@@ -473,12 +473,103 @@ def test_epoch_unit_cache_invalidates_on_directory_rewrite(spark, tmp_path):
     shutil.rmtree(path)
     shutil.move(scratch, path)
 
-    assert _path_stamp(path) != stamp1, "directory rewrite must move the stamp"
+    assert path_stamp(path) != stamp1, "directory rewrite must move the stamp"
     df2 = normalize_timestamp_cols(
         spark.read.parquet(path), "ts", cache_key=path
     )
     # A stale cached 'us' unit would return us // 1000 here (1000x off).
     assert df2.select(F.unix_micros("ts")).first()[0] == (us // 1000) * 1000
+
+
+def test_epoch_unit_inferred_again_after_partition_file_rewrite(
+    spark, tmp_path
+):
+    """Rewriting a part file in place inside a partition subdirectory
+    leaves every top-level entry's stat alone; the stamp must still move
+    and the epoch unit be inferred again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from feast_java_old_spark.sources.tables import (
+        normalize_timestamp_cols,
+        path_stamp,
+    )
+
+    us = 1706000000123456
+    path = str(tmp_path / "events")
+    part = tmp_path / "events" / "day=1" / "part-0.parquet"
+    part.parent.mkdir(parents=True)
+    pq.write_table(pa.table({"ts": pa.array([us], pa.int64())}), str(part))
+    df1 = normalize_timestamp_cols(spark.read.parquet(path), "ts", cache_key=path)
+    assert df1.select(F.unix_micros("ts")).first()[0] == us
+    stamp1 = path_stamp(path)
+
+    ms = us // 1000
+    pq.write_table(pa.table({"ts": pa.array([ms, ms], pa.int64())}), str(part))
+    assert path_stamp(path) != stamp1
+    df2 = normalize_timestamp_cols(spark.read.parquet(path), "ts", cache_key=path)
+    assert [r[0] for r in df2.select(F.unix_micros("ts")).collect()] == [
+        ms * 1000
+    ] * 2
+
+
+def _cycle(spark, reg, store):
+    from feast_java_old_spark.operators.historical import get_training_dataset
+
+    materialize(spark, reg, "views", store)
+    online = spark.read.parquet(online_table_path(store, "default", "views"))
+    entities = spark.createDataFrame(
+        [(1, t(10)), (2, t(10))], "user_id long, event_timestamp timestamp"
+    )
+    training = get_training_dataset(spark, reg, entities, ["views:score"])
+    return (
+        sorted((r.user_id, r.score) for r in online.collect()),
+        [r.views__score for r in training.collect()],
+    )
+
+
+def test_rewritten_batch_source_serves_new_rows(spark, tmp_path, tmp_store):
+    """A batch source overwritten between two materialize + training
+    export cycles is read again, not served from the relation cache."""
+    src = str(tmp_path / "src")
+    schema = "uid long, event_time timestamp, v double"
+    spark.createDataFrame([(1, t(1), 1.0)], schema).write.parquet(src)
+    reg = fs.Registry()
+    reg.apply_entity(fs.Entity("user_id", fs.ValueType.INT64))
+    reg.apply_feature_table(
+        fs.FeatureTable(
+            "views", ["user_id"], [fs.Feature("score", fs.ValueType.DOUBLE)],
+            batch_source=FileSource(
+                file_url=src,
+                event_timestamp_column="event_time",
+                field_mapping={"uid": "user_id", "v": "score"},
+            ),
+        )
+    )
+    assert _cycle(spark, reg, tmp_store) == ([(1, 1.0)], [1.0, None])
+
+    spark.createDataFrame(
+        [(1, t(2), 3.0), (2, t(2), 4.0)], schema
+    ).write.mode("overwrite").parquet(src)
+    assert _cycle(spark, reg, tmp_store) == ([(1, 3.0), (2, 4.0)], [3.0, 4.0])
+
+
+def test_deleted_cached_source_raises_like_uncached_read(spark, tmp_path):
+    import shutil
+
+    from feast_java_old_spark.sources.batch import read_batch_source
+
+    src = str(tmp_path / "gone")
+    spark.createDataFrame([(1, t(1))], "id long, ts timestamp").write.parquet(src)
+    source = FileSource(file_url=src, event_timestamp_column="ts")
+    assert read_batch_source(spark, source).count() == 1
+    shutil.rmtree(src)
+    with pytest.raises(Exception) as cached:
+        read_batch_source(spark, source)
+    with pytest.raises(Exception) as uncached:
+        spark.read.parquet(src)
+    assert type(cached.value) is type(uncached.value)
+    assert str(cached.value) == str(uncached.value)
 
 
 def test_vacuum_store_serves_identically_at_as_of(spark, tmp_path):

@@ -174,6 +174,40 @@ def test_dedup_components_long_chain(spark):
     assert set(out.values()) == {1}
 
 
+def test_dedup_components_counts_changes_when_observation_is_late(
+    spark, monkeypatch
+):
+    """A round whose observed change count misses the deadline counts its
+    changed rows with a job instead, and the labels are the same."""
+    from pyspark.sql import Observation
+
+    class NeverArrives(Observation):
+        """Creates the JVM observation but attaches no metrics to the
+        frame, so its result never completes."""
+
+        def _on(self, df, *exprs):
+            self._jvm = df.sparkSession._jvm
+            self._jo = self._jvm.org.apache.spark.sql.Observation(self._name)
+            return df
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 10)] + [(20, 21)], "doc_a long, doc_b long"
+    )
+    ids = spark.createDataFrame(
+        [(i,) for i in [*range(1, 11), 20, 21, 30]], "doc_id long"
+    )
+    observed = {
+        r.doc_id: r.group_id for r in dedup.dedup_components(pairs, ids).collect()
+    }
+    monkeypatch.setattr(dedup, "_OBSERVATION_WAIT_MS", 0)
+    monkeypatch.setattr(dedup, "Observation", NeverArrives)
+    counted = {
+        r.doc_id: r.group_id for r in dedup.dedup_components(pairs, ids).collect()
+    }
+    assert counted == observed
+    assert counted == {**{i: 1 for i in range(1, 11)}, 20: 20, 21: 20, 30: 30}
+
+
 def test_dedup_components_nonconvergence_raises(spark):
     # diameter > max_iterations: must NOT silently return partial labels
     pairs = spark.createDataFrame(
