@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Benchmark harness: runs the engine's headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
+a session sized from the host (``local[$SPARK_GRAFT_CPUS]`` when that is
+set) and prints ONE JSON line.
 
 Each query is forced to full execution with a noop sink (no driver-side
 collect cost, no result materialization skew).
@@ -16,238 +17,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+import __spark_entry__ as _entry
 
-HEADLINE = [
-    "s1_scan_projection",
-    "p5_type_conformance",
-    "a1_latest_per_key",
-    "a1_latest_window",
-    "j1_entity_lookup",
-    "j1_lookup_shuffle",
-    "j2_compound_key",
-    "j3_max_age",
-    "historical_asof",
-    "historical_asof_range",
-    "historical_asof_bucketed",
-    "historical_training_set",
-    "a2_metrics_rollup",
-    "a3_window_rollup",
-    "a4_sliding_rollup",
-    "sliding_distinct",
-    "sliding_distinct_approx",
-    "a5_sessions",
-    "a6_percentiles",
-    "feature_drift",
-    "ks_drift",
-    "cusum_alerts",
-    "segment_overlap",
-    "segment_overlap_kmv",
-    "key_skew",
-    "a7_rollup_revenue",
-    "a8_cube_revenue",
-    "tpch_q5",
-    "tpch_q1",
-    "tpch_q6",
-    "tpch_q14",
-    "tpch_q18",
-    "dedup_exact",
-    "doc_fingerprint",
-    "token_count",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "dedup_prefix_filter",
-    "dedup_containment",
-    "dedup_verified",
-    "dedup_incremental",
-    "dedup_stats",
-    "novelty_score",
-    # r5: dedup_verified_simhash re-scoped to the Manku composition
-    # (4x8 bands, hamming<=3, pigeonhole-complete recall) — 45s -> ~4s
-    # at sf0.1, so it benches again. Its r1-r4 jaccard-0.4-recall form
-    # was both unbenchable (~5M incidental candidates) and silently
-    # 252/256 at sf0.1 (banding can't be recall-complete at that
-    # distance); see the query docstring.
-    "dedup_verified_simhash",
-    "chunk_dedup",
-    "dedup_crossmodal",
-    "text_stats",
-    "text_repetition",
-    "pii_scrub",
-    "stratified_sample",
-    "vocab_topk",
-    "corpus_rollup",
-    "sequence_pack",
-    "quality_classifier",
-    "lang_id",
-    "pipeline_clean_corpus",
-    "rejection_report",
-    "training_corpus",
-    "similarity_topk",
-    "mmr_rerank",
-    "random_projection",
-    "semantic_decontaminate",
-    "ccnet_buckets",
-    "ann_eval",
-    "similarity_ann_lsh",
-    "similarity_ann_ivf",
-    "similarity_ann_multiprobe",
-    "embedding_near_dups",
-    "embedding_centroids",
-    "pq_encode",
-    "pq_adc",
-    "kmeans_train",
-    "ann_ivf_pq",
-    "multimodal_decode",
-    "multimodal_frames",
-    "odfv_transform",
-    "decontaminate",
-    "dsir_weights",
-    "corpus_shuffle",
-    "shard_manifest",
-    "text_normalize",
-    "hard_negatives",
-    "domain_mix",
-    "corpus_split",
-    "domain_topk",
-    "kmeans_refine",
-    "unigram_logprob",
-    "embedding_outliers",
-    "interval_join",
-    "sessionize",
-    "domain_upsample",
-    "corpus_dedup_apply",
-    "dedup_keep_best",
-    "multi_window_features",
-    "rolling_features",
-    "feature_pivot",
-    "asof_nearest",
-    "bm25_search",
-    "phrase_search",
-    "rrf_fusion",
-    "tfidf_terms",
-    "weighted_sample",
-    "skew_join",
-    "sketch_distinct",
-    "target_encode",
-    "winsorize",
-    "robust_outliers",
-    "chunk_documents",
-    "scd2_history",
-    "quantile_bin",
-    "quantile_bin_approx",
-    "resample_ffill",
-    "profile_columns",
-    "profile_columns_approx",
-    "bpe_pairs",
-    "line_filter",
-    "cdc_apply",
-    "normalize_features",
-    "funnel",
-    "cohort_retention",
-    "zorder_key",
-    "hilbert_key",
-    "curve_skip_audit",
-    "scd2_snapshot",
-    "token_encode",
-    "heavy_hitters",
-    "count_min",
-    "bloom_filter",
-    "cms_join_size",
-    "ewma_features",
-    "rollup_merge",
-    "boilerplate",
-    "semdedup",
-    "pagerank",
-    "triangle_count",
-    "k_anonymity",
-    "bigram_logprob",
-    "top_orders",
-    "scd2_join",
-    "token_budget",
-    "snapshot_diff",
-    "user_sequences",
-    "length_batches",
-    "negative_samples",
-    "session_cooccurrence",
-    "fuzzy_match",
-    "fuzzy_match_snm",
-    "calendar_features",
-    "pmi_collocations",
-    # r6: the two non-stream registered queries that had no bench row
-    # (VERDICT r5 #5) — iterative CC is where a perf surprise would hide.
-    "dedup_components",
-    # r7: schema-versioned materialize -> cross-epoch conformed serve.
-    "schema_evolution",
-    "schema_time_travel",
-    # r7: ExactSubstr dedup (Lee et al. ACL 2022) — span discovery + apply.
-    "substring_spans",
-    "substring_dedup",
-    # r7: small-file compaction planner.
-    "compaction_plan",
-    # r7: source-format round-trip + data-quality expectations suite.
-    "source_formats",
-    "expectations",
-    # r7: held-out trigram stupid-backoff LM + Bloom-pruned join.
-    "lm_backoff",
-    "bloom_prune_join",
-    # r7: in-engine distributed logistic-regression training.
-    "logreg_quality",
-    "linreg_orders",
-    "weighted_quantiles",
-    "store_vacuum",
-    # r7: global ranks without a global sort; zone-map skip audit.
-    "global_ranks",
-    "zone_map_prune",
-    # r7: join-shape breadth — semi (Q4), outer-distribution (Q13), anti (Q16).
-    "tpch_q4",
-    "tpch_q13",
-    "tpch_q16",
-    "tpch_q17",
-    "tpch_q21",
-    "tpch_q21_agg",
-    "tpch_q22",
-    "tpch_q15",
-    "tpch_q11",
-    # r9: the deepest decorrelation nest (IN > IN + correlated scalar agg).
-    "tpch_q20",
-    "grouping_sets_revenue",
-    "not_in_semantics",
-    # r7: per-user Markov transition matrix + feed-silence report.
-    "event_transitions",
-    "event_gaps",
-    "attribution",
-    # r9: audit-trail lineage of a register->materialize->serve session;
-    # the Prometheus-parity metrics export of the same scenario.
-    "audit_trail",
-    "serving_metrics",
-    "auth_audit",
-    # r12: the serving REST controller scenario (late-r11 registration,
-    # gate-fronted r12) joins the headline — NEW vs the frozen r11
-    # baseline, so its first appearance has no prior to ratio against
-    # and the headline total grows by its cost (noted in REGRESSION.md).
-    "rest_online_features",
-    # r13: the cross-process ODFV transformation service (Arrow IPC over
-    # a real localhost socket from inside mapInPandas) — first
-    # appearance, no prior; its in-process twin odfv_transform stays the
-    # comparison floor.
-    "odfv_transform_service",
-    # r14: the client-SDK serving scenario (FeastClient over the
-    # gRPC-over-HTTP socket, Rows with statuses) — first appearance, no
-    # prior; rest_online_features is its flat-map REST twin and the
-    # comparison floor.
-    "sdk_online_features",
-    # r15: compound-entity serve through the FeastClient
-    # (ServingServiceBigTableIT:533-596 twin over the J2 env) — first
-    # appearance, no prior; j2_compound_key is the direct-operator floor
-    # plus the client/socket hop and the ~12k-row request round trip.
-    "sdk_compound_entity",
-    # r16: compound-entity serve through the proto-binary wire codec
-    # (HttpJsonChannel codec='proto' + raw-socket negotiation probe) —
-    # first appearance, no prior; sdk_compound_entity is its JSON-codec
-    # twin and the comparison floor.
-    "sdk_proto_entity",
-]
 
 # Queries whose ISOLATED fresh-JVM variance band exceeds 1.5x — for
 # j2_compound_key three identical warm JVMs spanned 2.07–4.70 s (r14
@@ -271,6 +42,14 @@ MEDIAN_OF = {
 # these measure the ceiling the production plans are compared against.
 TRACKED_CEILINGS = [
     "kmeans_refine_expr",
+]
+
+# Every registered query in registry order, minus the streaming runs
+# (their wall time is trigger pacing, not plan cost) and the ceilings.
+HEADLINE = [
+    name
+    for name in _entry.queries()
+    if not name.startswith("stream_") and name not in TRACKED_CEILINGS
 ]
 
 
@@ -413,9 +192,7 @@ def isolated_once(names: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = _build_session()
     _warm(spark, sf_dir)
-    import __spark_entry__ as e
-
-    qs = e.queries()
+    qs = _entry.queries()
     out = {}
     for name in names:
         runs = []
@@ -431,74 +208,17 @@ def isolated_once(names: list[str]) -> None:
 
 
 def _build_session():
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    from feast_java_old_spark.sources.tables import session_builder
+    from feast_java_old_spark.sources.tables import host_cpus, session_builder
 
     spark = session_builder(
         "bench",
-        master=f"local[{cpus}]",
         **{
-            "spark.sql.shuffle.partitions": str(max(int(cpus), 16)),
-            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+            "spark.sql.shuffle.partitions": str(max(host_cpus(), 16)),
             "spark.ui.enabled": "false",
             "spark.sql.autoBroadcastJoinThreshold": "64MB",
-            # r16 (guide §5, "the driver should do almost no data work"):
-            # one JVM runs ~190 multi-stage queries back to back, and the
-            # driver accumulates ContextCleaner backlog (broadcast /
-            # localCheckpoint blocks waiting on reference-queue GC) plus
-            # retained SQL-execution state (plan graphs + metrics for
-            # EVERY completed query; the SQL status store retains 1000
-            # executions by default even with the UI off). Old-gen fill
-            # from both caused transient suite-wide stalls (measured:
-            # 10-20x single-query spikes; back-half A/B 376.6 s stock vs
-            # 251.8 s with these three confs). Not a local[32]-only
-            # tune: any long-lived driver running many short queries
-            # (a serving driver, a notebook, a query service) has the
-            # same retention/cleaner dynamics at any cluster size; the
-            # interval is env-overridable for production sessions.
-            "spark.cleaner.periodicGC.interval": os.environ.get(
-                "SPARK_GRAFT_PERIODIC_GC", "15s"
-            ),
-            # r16: the periodic GC above is a driver System.gc() — by
-            # default a stop-the-world FULL collection, which taxed every
-            # short query ~0.3-0.5 s on this host (isolated A/B: tpch_q6
-            # warm 1.09 s with STW full GCs vs 0.53 s without). G1's
-            # ExplicitGCInvokesConcurrent turns System.gc() into a
-            # concurrent cycle: reference processing still runs (the
-            # ContextCleaner backlog still drains — the point of the
-            # periodic GC), but the pause disappears. Env-overridable
-            # like the interval.
-            #
-            # r17: ReservedCodeCacheSize=1g. ~190 distinct codegen'd
-            # queries push thousands of hot generated methods through the
-            # default 240 MB JIT code cache; once the sweeper starts
-            # flushing (observed mid-suite: profiled-nmethods heap 80/118
-            # MB, sweeper thread 11 s CPU), newly generated classes queue
-            # behind it and CPU-dense stages run INTERPRETED — measured
-            # as random 2-5x spikes concentrated on the shingle/array
-            # dedup family and on end-of-suite reruns (whose recompiled
-            # classes are new to the JIT). Full-suite A/B on one host
-            # window: 265-340 s (4 runs, default) vs 214.6 s (1g). Not a
-            # local[32] tune: any long-lived driver/executor JVM serving
-            # many distinct queries has the same code-cache dynamics.
-            "spark.driver.extraJavaOptions": os.environ.get(
-                "SPARK_GRAFT_DRIVER_JAVA_OPTS",
-                "-XX:+ExplicitGCInvokesConcurrent"
-                " -XX:ReservedCodeCacheSize=1g",
-            ),
-            # r16 (guide §1.2 driver-side cost): PySpark 4's per-API-call
-            # call-site capture (spark.python.sql.dataFrameDebugging,
-            # static conf, default true) walks the Python stack on EVERY
-            # Column/DataFrame op — pure debugging metadata. Plan-heavy
-            # queries build thousands of expression nodes per run
-            # (interleaved in-JVM A/B, capture off vs on: logreg_quality
-            # 5.70 vs 6.65 s, audit_trail 2.51 vs 2.85 s, dedup_incremental
-            # 1.53 vs 1.90 s, curve_skip_audit 1.66 vs 1.87 s medians).
-            # Driver-side Python cost is scale-independent — disabling a
-            # debug feature is the production default, not a local tune.
-            "spark.python.sql.dataFrameDebugging.enabled": os.environ.get(
-                "SPARK_GRAFT_DF_DEBUGGING", "false"
-            ),
+            # r16: the SQL status store retains 1000 executions by default
+            # even with the UI off; one JVM runs ~190 multi-stage queries,
+            # and the retained plan graphs and metrics fill the old gen.
             "spark.sql.ui.retainedExecutions": "50",
             "spark.ui.retainedJobs": "300",
             "spark.ui.retainedStages": "500",
@@ -528,10 +248,7 @@ def _warm(spark, sf_dir: str) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
-
-    import __spark_entry__ as e
 
     spark = _build_session()
     _warm(spark, sf_dir)
@@ -571,7 +288,7 @@ def main() -> None:
         spark.catalog.clearCache()
         return elapsed
 
-    qs = e.queries()
+    qs = _entry.queries()
     timings: dict[str, float] = {}
     median_samples: dict[str, list[float]] = {}
     for name in HEADLINE:
@@ -650,7 +367,7 @@ def main() -> None:
         "median_samples": median_samples,
         "tracked_ceilings": ceilings,
         "sf": sf,
-        "cpus": int(cpus),
+        "cpus": spark.sparkContext.defaultParallelism,
     }
     with open(detail_path, "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)

@@ -165,7 +165,7 @@ def main(argv: Optional[list[str]] = None) -> int:
     )
     parser.add_argument("--host", default="127.0.0.1")
     parser.add_argument(
-        "--master", default="local[*]", help="Spark master URL"
+        "--master", default=None, help="Spark master URL (default: sized from the host)"
     )
     args = parser.parse_args(argv)
 

@@ -126,28 +126,31 @@ def main() -> int:
 
     import __spark_entry__ as e
 
+    from feast_java_old_spark.sources.tables import (
+        host_cpus,
+        host_driver_memory,
+        session_builder,
+    )
+
     if driver_like:
         # The round driver builds its own session with default confs — no
         # nanosAsLong, no UTC pin. Every queries() entry must survive that.
+        # Only its size comes from the host.
         from pyspark.sql import SparkSession
 
         spark = (
             SparkSession.builder.appName("check-correctness-driver")
-            .master("local[8]")
+            .master(f"local[{host_cpus()}]")
             .config("spark.ui.enabled", "false")
-            .config("spark.driver.memory", "8g")
+            .config("spark.driver.memory", host_driver_memory())
             .getOrCreate()
         )
     else:
-        from feast_java_old_spark.sources.tables import session_builder
-
         spark = session_builder(
             "check-correctness",
-            master="local[8]",
             **{
                 "spark.sql.shuffle.partitions": "16",
                 "spark.ui.enabled": "false",
-                "spark.driver.memory": "8g",
             },
         ).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -7,19 +7,20 @@ changed since that sha — the plan-audit analog of the BENCH_DETAIL
 fingerprint guard (VERDICT r14 "What's wrong" #2: PLANS.md was
 regenerated 11 commits before close and nothing checked that the gap
 was plan-neutral)."""
-import io, re, subprocess, sys
-sys.path.insert(0, "/root/repo")
+import io, os, re, subprocess, sys
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 import __spark_entry__ as e
 from feast_java_old_spark.sources.tables import session_builder
 
-spark = session_builder("plans", master="local[4]",
+spark = session_builder("plans",
     **{"spark.sql.autoBroadcastJoinThreshold": "64MB"}).getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
 sf = "/root/testdata/sf0.01"
 qs = e.queries()
 
 PICKS = [
-    ("j1_entity_lookup", "Online lookup (J1): the online table is scanned and column-pruned, never shuffled — request keys broadcast in (inner BHJ), matched rows broadcast back (left BHJ)."),
+    ("j1_entity_lookup", "Online lookup (J1): the online table is scanned and column-pruned, never shuffled — it is left-semi-joined against the broadcast request keys, and the matched rows broadcast back into a left BHJ against the request frame."),
     ("a1_latest_per_key", "Materialization (A1): max(struct) aggregate — partial_max runs map-side, so the shuffle carries one row per (key, map partition), not the history."),
     ("historical_asof", "Point-in-time as-of join: union-window form — one shuffle of history+requests; per-key cost stays linear on hot keys."),
     ("historical_asof_bucketed", "Skew-resistant as-of: window partitions salted with a time bucket; per-(key,bucket) partial_max summaries feed the carry-in, and a LeftSemi join prunes history buckets with no requests."),
@@ -127,7 +128,7 @@ PICKS = [
 # sees zero diff vs the stamped sha and the freeze passes on exactly
 # the silent-stale audit the guard exists to prevent.
 _dirty = subprocess.run(
-    ["git", "-C", "/root/repo", "status", "--porcelain", "--",
+    ["git", "-C", REPO, "status", "--porcelain", "--",
      "feast_java_old_spark/operators", "feast_java_old_spark/plans"],
     capture_output=True, text=True, check=True,
 ).stdout.strip()
@@ -138,7 +139,7 @@ if _dirty:
         "Commit them first so the stamped sha describes the generated plans."
     )
 HEAD = subprocess.run(
-    ["git", "-C", "/root/repo", "rev-parse", "HEAD"],
+    ["git", "-C", REPO, "rev-parse", "HEAD"],
     capture_output=True, text=True, check=True,
 ).stdout.strip()
 
@@ -197,8 +198,9 @@ emit(
     "The serving REST route's underlying plan (the queries() entry is "
     "the eager HTTP scenario; this is what the controller executes): "
     "the J1 double-BHJ — the online table is scanned and column-pruned, "
-    "NEVER shuffled; request keys broadcast into the inner BHJ, matched "
-    "rows broadcast back into the left BHJ against the request frame; "
+    "NEVER shuffled; it is left-semi-joined against the broadcast request "
+    "keys, and the matched rows broadcast back into the left BHJ against "
+    "the request frame; "
     "the max_age staleness check is a pure projection. The response "
     "collect is bounded by the limit(max_rows+1) guard.",
     _ctl.retrieve(
@@ -284,6 +286,6 @@ try:
     )
 finally:
     shutil.rmtree(_store, ignore_errors=True)
-with open("/root/repo/docs/PLANS.md", "w") as f:
+with open(os.path.join(REPO, "docs", "PLANS.md"), "w") as f:
     f.write(out.getvalue())
 print("written", len(out.getvalue()), "chars")

@@ -119,10 +119,11 @@ def main() -> None:
 
     queries = list(results[SFS[-1]]["queries"].keys())
     out = io.StringIO()
-    out.write("""# SCALING — measured runtime across a 100x data range
+    cpus = results[SFS[-1]].get("cpus")
+    out.write(f"""# SCALING — measured runtime across a 100x data range
 
 Best-of-2 wall-clock per headline query (two independent JVMs per scale
-factor; min filters one-off JIT/GC spikes), local[32] (regenerate:
+factor; min filters one-off JIT/GC spikes), local[{cpus}] (regenerate:
 `python scripts/gen_scaling.py`). `alpha` is the
 fitted exponent of runtime ~ data^alpha between sf0.01 and sf0.1:
 **alpha <= ~0.3** = fixed-cost dominated (Spark job setup, codegen —

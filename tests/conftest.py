@@ -3,28 +3,22 @@ import shutil
 import tempfile
 
 import pytest
-from pyspark.sql import SparkSession
+
+from feast_java_old_spark.sources.tables import session_builder
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("feast_java_old_spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .config(
-            "spark.sql.warehouse.dir",
-            tempfile.mkdtemp(prefix="spark_warehouse_"),
-        )
-        .getOrCreate()
-    )
+    s = session_builder(
+        "feast_java_old_spark-tests",
+        **{
+            "spark.sql.shuffle.partitions": "8",
+            "spark.ui.enabled": "false",
+            "spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="spark_warehouse_"),
+        },
+    ).getOrCreate()
     yield s
     s.stop()
 

@@ -244,3 +244,39 @@ def test_plans_guard_fails_closed_on_git_failure(tmp_path, monkeypatch):
     monkeypatch.setattr(sp, "run", breaking_run)
     with pytest.raises(RuntimeError, match="git diff failed"):
         bench.check_plans_fresh(str(repo))
+
+
+# ------------------------------------------ derived lists, host sizing
+
+
+def test_headline_is_the_registry_minus_streams_and_ceilings():
+    import __spark_entry__ as e
+
+    assert bench.HEADLINE == [
+        name
+        for name in e.queries()
+        if not name.startswith("stream_") and name not in bench.TRACKED_CEILINGS
+    ]
+    assert "kmeans_refine_expr" not in bench.HEADLINE
+    assert not [n for n in bench.HEADLINE if n.startswith("stream_")]
+
+
+def test_session_builder_sizes_from_the_host(monkeypatch):
+    import os
+
+    from feast_java_old_spark.sources.tables import session_builder
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    opts = session_builder("t")._options
+    assert opts["spark.master"] == f"local[{len(os.sched_getaffinity(0))}]"
+    assert opts["spark.driver.memory"].endswith("m")
+    assert int(opts["spark.driver.memory"][:-1]) > 0
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert session_builder("t")._options["spark.master"] == "local[3]"
+
+    opts = session_builder(
+        "t", master="local[2]", **{"spark.driver.memory": "1g"}
+    )._options
+    assert opts["spark.master"] == "local[2]"
+    assert opts["spark.driver.memory"] == "1g"

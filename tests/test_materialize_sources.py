@@ -512,6 +512,17 @@ def test_epoch_unit_inferred_again_after_partition_file_rewrite(
         ms * 1000
     ] * 2
 
+    # A second rewrite replaces the path's one cache entry, not adds one.
+    from feast_java_old_spark.sources.tables import _EPOCH_UNIT_CACHE
+
+    s = us // 1_000_000
+    pq.write_table(pa.table({"ts": pa.array([s] * 3, pa.int64())}), str(part))
+    df3 = normalize_timestamp_cols(spark.read.parquet(path), "ts", cache_key=path)
+    assert [r[0] for r in df3.select(F.unix_micros("ts")).collect()] == [
+        s * 1_000_000
+    ] * 3
+    assert [k for k in _EPOCH_UNIT_CACHE if k[0] == path] == [(path, "ts")]
+
 
 def _cycle(spark, reg, store):
     from feast_java_old_spark.operators.historical import get_training_dataset
