@@ -184,6 +184,22 @@ def freeze_baseline(repo: str | None = None) -> None:
     )
 
 
+def same_host_prior(baseline_path: str, sf: float, cpus: int) -> dict[str, float]:
+    """The frozen baseline's per-query seconds, or nothing when it was
+    measured at another scale factor or CPU count: gen_scaling.py runs
+    this harness across sf0.001/0.01/0.1 back-to-back, and a baseline
+    from a bigger host flags queries that are only slower for having
+    fewer cores."""
+    try:
+        with open(baseline_path) as f:
+            base = json.load(f)
+    except (OSError, ValueError):
+        return {}
+    if base.get("sf") != sf or base.get("cpus") != cpus:
+        return {}
+    return base.get("queries", {}) or {}
+
+
 def isolated_once(names: list[str]) -> None:
     """Adjudication mode: run ONLY the named queries, once each, in this
     fresh JVM (same session confs + warm-up as the full suite), and
@@ -197,11 +213,11 @@ def isolated_once(names: list[str]) -> None:
     for name in names:
         runs = []
         for _ in range(2):  # cold (plan compile + codegen) then warm
-            t0 = time.time()
+            t0 = time.perf_counter()
             qs[name](spark, sf_dir).write.mode("overwrite").format(
                 "noop"
             ).save()
-            runs.append(round(time.time() - t0, 3))
+            runs.append(round(time.perf_counter() - t0, 3))
             spark.catalog.clearCache()
         out[name] = {"cold": runs[0], "warm": runs[1]}
     print(json.dumps({"isolated": out}, separators=(",", ":")))
@@ -264,22 +280,13 @@ def main() -> None:
     # rerun ratcheted the baseline, so a query could drift past the
     # flag threshold ACROSS the round without ever being adjudicated
     # (r8: j3_max_age 2.01x vs r7, never flagged — VERDICT r8 #1).
-    prior: dict[str, float] = {}
-    try:
-        with open(baseline_path) as f:
-            _pj = json.load(f)
-        # Same-SF baselines only: gen_scaling.py runs this harness across
-        # sf0.001/0.01/0.1 back-to-back, and a smaller-SF detail file
-        # would flag every query at the next SF up.
-        if _pj.get("sf") == sf:
-            prior = _pj.get("queries", {}) or {}
-    except Exception:
-        pass
+    cpus = spark.sparkContext.defaultParallelism
+    prior = same_host_prior(baseline_path, sf, cpus)
 
     def run_once(fn, name: str) -> float:
-        t0 = time.time()
+        t0 = time.perf_counter()
         fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        elapsed = round(time.time() - t0, 3)
+        elapsed = round(time.perf_counter() - t0, 3)
         # Queries that persist small reused frames (request sets, edge
         # lists, ranked frames) populate them during their own timed
         # execution; drop them afterwards so storage-memory pressure
@@ -367,7 +374,7 @@ def main() -> None:
         "median_samples": median_samples,
         "tracked_ceilings": ceilings,
         "sf": sf,
-        "cpus": spark.sparkContext.defaultParallelism,
+        "cpus": cpus,
     }
     with open(detail_path, "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)

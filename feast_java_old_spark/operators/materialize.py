@@ -208,9 +208,11 @@ def materialize(
         # one hash bucket of keys) and sort within partitions by key, so
         # each file's row groups carry tight min/max statistics on the
         # key columns. No serving plan pushes a key predicate into the
-        # scan today (the online lookup is a broadcast semi join;
-        # the executed plan shows only `PushedFilters: [IsNotNull(<key>)]`),
-        # so point lookups get no row-group skipping from this layout yet.
+        # scan today: the online lookup filters the scan with
+        # `array_contains(array(<request keys>), <key>)`, which parquet
+        # cannot take as a pushed filter (the executed plan shows only
+        # `PushedFilters: [IsNotNull(<key>)]`), so point lookups get no
+        # row-group skipping from this layout yet.
         latest.repartition(
             *[F.col(k) for k in table.entities]
         ).sortWithinPartitions(*table.entities).write.mode(

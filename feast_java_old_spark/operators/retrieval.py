@@ -18,47 +18,66 @@ Parity targets:
 - response rows in input order: ``OnlineServingServiceV2.java:307-319``.
 
 Scale design: the reference answers this with N pipelined Redis HMGETs
-(one RTT amortized over N keys, ``OnlineRetriever.java:89-99``). The
-Spark-native equivalent is **two broadcast hash joins per table**, and
-no shuffle at all for driver-side request rows:
+(one RTT amortized over N keys, ``OnlineRetriever.java:89-99``). Here a
+request is ONE ``spark.sql`` statement, its text built in pure Python:
+the request frame and each table's online relation are bound in as
+temporary views, and each table contributes one subquery — its pruned
+projection (keys, event time, each requested feature with P5
+conformance) — left-joined to the request rows and broadcast. Values
+and statuses are ``CASE`` expressions over the join (one helper for
+both). No shuffle for driver-side request rows:
 
-1. ``online ⋈ broadcast(request keys)`` — a left semi join with the
-   request's key columns as the build side, so the online table is
-   only scanned (with column pruning down to the requested features),
-   never shuffled; at most one row per requested key survives, and
-   duplicate request keys need no ``distinct``.
-2. ``request ⋈ broadcast(step-1 result)`` — left BHJ of two tiny frames,
-   preserving every request row for NOT_FOUND semantics.
+- Driver-side rows: the distinct non-NULL request keys ride inside each
+  table's scan as one ``array_contains(array(<literals>), <key>)``
+  filter (a struct of the columns for a compound key). Literals are
+  spelled exactly and cannot inject: strings as ``CAST(X'<utf-8 hex>'
+  AS STRING)``, bytes as ``X'<hex>'``, floats by ``repr`` with NaN and
+  infinities spelled out, identifiers backtick-quoted. The rows are
+  gathered with ``/*+ COALESCE(1) */`` and ``SORT BY`` the row index.
+  A 10-row request over two tables is three Spark jobs: a scan
+  broadcast per table and the result.
+- DataFrame requests keep their keys off the driver: the scan is
+  left-semi-joined to their broadcast key columns (a semi join ignores
+  duplicate build keys), and input order comes from ``ORDER BY``.
+- ``strategy="shuffle"`` (backfill scale) carries no broadcast hints,
+  so AQE picks the join, and sorts with ``ORDER BY``;
+  ``preserve_order=False`` sorts nothing.
 
-Each table's values and statuses are then one ``select``. Input order
-comes back by gathering the broadcast-joined rows into one partition
-and sorting it locally (driver-side rows) or by a global sort
-(DataFrame requests, ``strategy="shuffle"``).
+Why an array and not ``IN``: Spark turns an ``IN`` list into an
+``InSet`` only above ``spark.sql.optimizer.inSetConversionThreshold``
+(10); below it each literal is inlined into generated code, so every
+new key set compiled about 2.3 Janino classes (15 ms each). An array
+literal is a reference object in generated code, so a new key set
+compiles nothing. Measured on 4 CPUs, filter build + count, 12 calls:
+at 10 keys ``IN`` 157 ms against 98 ms for ``array_contains``; at 11
+keys 77 ms against 89 ms; at 5,000 keys 147 ms against 139 ms. Neither
+filter is a pushed parquet predicate.
 
-A local online table's relation (its parquet schema is inferred once)
-comes from the process-wide relation cache in ``sources.tables``
+Building text needs no py4j, so nothing is memoized per request shape:
+a warm two-table request costs about 40 py4j round trips (the Arrow
+request frame, binding and dropping the views, the statement, the
+collect) where a plan built Column by Column cost several hundred. A
+local online table's relation (its parquet
+schema is inferred once) comes from the process-wide relation cache in
+``sources.tables``
 (:func:`~feast_java_old_spark.sources.tables.cached_relation`), which
-rebuilds it when a stamp of the served directory's files changes. The
-per-spec projection and output Columns built on a relation are kept
-with it (:func:`_cached_table_plan`). A 10-row request over two tables
-is then at most five Spark jobs: a key-set broadcast per distinct set
-of join keys (Spark reuses it across tables with the same keys), a
-scan broadcast per table, and the result.
+rebuilds it when a stamp of the served directory's files changes.
 
-A plain ``request.join(online, keys, "left")`` would force Spark to
-shuffle the online table (a left join cannot broadcast its preserved
-side); this formulation cannot.
+The online table is never shuffled: it is scanned, filtered and
+pruned, and that small result is the build side of a left broadcast
+hash join whose preserved side is the request.
 """
 
 from __future__ import annotations
 
 import datetime as dt
-import threading
-import weakref
+import math
+import uuid
 from typing import Optional, Sequence, Union
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from feast_java_old_spark.functions.refs import FeatureRef, parse_feature_ref
 from feast_java_old_spark.operators.materialize import online_table_path
@@ -98,7 +117,6 @@ def _arrow_request_frame(
         import pyarrow as pa
     except ImportError:  # pragma: no cover - pyarrow ships with pyspark
         return None
-    from pyspark.sql import types as T
 
     _PA_OF = {
         T.BooleanType(): pa.bool_(),
@@ -206,133 +224,113 @@ def _entity_rows_df(
     return df.select(*cols)
 
 
-def _conform_type(col: Column, actual, declared) -> Column:
-    """P5: value whose stored type mismatches the declared type → NULL."""
-    if actual == declared:
-        return col
-    return col.try_cast(declared)
+def _quote(name: str) -> str:
+    """``name`` as a SQL identifier: backtick-quoted, backticks doubled."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def _table_plan(
-    online: Optional[DataFrame],
-    table_name: str,
-    spec: FeatureTable,
-    trefs: Sequence[FeatureRef],
-    full_feature_names: bool,
-    include_statuses: bool,
-) -> tuple[Optional[DataFrame], list[str], list[Column]]:
-    """One table's share of the plan: the pruned online projection
-    (``None`` when there is nothing to join — a never-materialized table
-    or no registered feature requested), and the names and value/status
-    Columns its output ``select`` appends. The Columns refer to the
-    request's ``__req_ts`` and the projection's aliases by name, so they
-    are reusable across requests."""
-    keys = list(spec.entities)
-    ts_alias = f"__ts__{table_name}"
-    known = [r for r in trefs if spec.feature(r.name) is not None]
-    pruned = None
-    if online is not None and known:
-        feat_cols = []
-        for r in known:
-            declared = spec.feature(r.name).value_type.to_spark()
-            if r.name in online.columns:
-                col = _conform_type(
-                    F.col(r.name), online.schema[r.name].dataType, declared
-                )
-            else:
-                col = F.lit(None).cast(declared)
-            feat_cols.append(col.alias(f"__v__{table_name}__{r.name}"))
-        pruned = online.select(
-            *keys, F.col("event_timestamp").alias(ts_alias), *feat_cols
-        )
+def _sql_literal(v) -> str:
+    """``v`` as exact SQL text. Nothing from outside the process is ever
+    put between quotes: a string is spelled as its UTF-8 bytes."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, int):
+        if not -(1 << 63) <= v < 1 << 63:
+            raise ValueError(f"value {v} is outside the INT64 range")
+        return f"{int(v)}L"
+    if isinstance(v, float):
+        if math.isnan(v):
+            return "double('NaN')"
+        if math.isinf(v):
+            return "double('Infinity')" if v > 0 else "double('-Infinity')"
+        return f"{float(v)!r}D"
+    if isinstance(v, str):
+        return f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)"
+    if isinstance(v, (bytes, bytearray)):
+        return f"X'{bytes(v).hex()}'"
+    if isinstance(v, dt.datetime):
+        return f"timestamp_micros({T.TimestampType().toInternal(v)})"
+    if isinstance(v, list):
+        return "array(" + ", ".join(_sql_literal(x) for x in v) + ")"
+    raise TypeError(f"cannot use a {type(v).__name__} value in a request")
 
-    found = F.col(ts_alias).isNotNull()
-    if spec.max_age_secs and spec.max_age_secs > 0:
-        # Seconds arithmetic, matching the reference's
-        # Timestamp.getSeconds math (OnlineServingServiceV2.java:365-370).
-        age = (
-            F.col("__req_ts").cast("timestamp").cast("long")
-            - F.col(ts_alias).cast("timestamp").cast("long")
-        )
-        outside = found & (age > F.lit(spec.max_age_secs))
+
+def _feature_value_sql(found: str, outside: str, raw: str) -> tuple[str, str]:
+    """The value and status of one feature, as SQL over three boolean or
+    value expressions: ``found`` (the key has a stored row), ``outside``
+    (that row is older than max age) and ``raw`` (the stored value)."""
+    value = f"CASE WHEN ({found}) AND NOT ({outside}) THEN {raw} END"
+    status = (
+        f"CASE WHEN NOT ({found}) THEN '{STATUS_NOT_FOUND}'"
+        f" WHEN {outside} THEN '{STATUS_OUTSIDE_MAX_AGE}'"
+        f" WHEN {raw} IS NULL THEN '{STATUS_NULL_VALUE}'"
+        f" ELSE '{STATUS_PRESENT}' END"
+    )
+    return value, status
+
+
+def _max_age_sql(found: str, request_ts: str, event_ts: str, max_age_secs) -> str:
+    """Whether a found row is older than ``max_age_secs`` at the request
+    time, in whole seconds like the reference's ``Timestamp.getSeconds``
+    math (``OnlineServingServiceV2.java:365-370``); ``FALSE`` when the
+    table has no max age."""
+    if not (max_age_secs and max_age_secs > 0):
+        return "FALSE"
+    return (
+        f"({found}) AND (CAST(CAST({request_ts} AS TIMESTAMP) AS BIGINT)"
+        f" - CAST(CAST({event_ts} AS TIMESTAMP) AS BIGINT))"
+        f" > {_sql_literal(max_age_secs)}"
+    )
+
+
+def _key_filter(
+    rows: Sequence[dict], keys: list[str], req_types: dict, online_types: dict
+) -> str:
+    """The request's key set as one array literal tested against the
+    online table's key columns (a struct of them for a compound key).
+
+    Rows with a NULL key component are left out: a join key never
+    matches NULL. Where a key column is a string on one side only, the
+    string side is cast to the other side's type, as the join's own
+    comparison does."""
+    lit_casts: list[Optional[str]] = []
+    probes: list[str] = []
+    for k in keys:
+        req_t, online_t = req_types[k], online_types.get(k)
+        req_str = isinstance(req_t, T.StringType)
+        online_str = isinstance(online_t, T.StringType)
+        probe = _quote(k)
+        lit_cast = None
+        if req_str and online_t is not None and not online_str:
+            lit_cast = online_t.simpleString()
+        elif online_str and not req_str:
+            probe = f"TRY_CAST({probe} AS {req_t.simpleString()})"
+        lit_casts.append(lit_cast)
+        probes.append(probe)
+    elements: dict[str, None] = {}
+    for r in rows:
+        values = [r.get(k) for k in keys]
+        if any(v is None for v in values):
+            continue
+        parts = [_sql_literal(v) for v in values]
+        parts = [
+            p if c is None else f"TRY_CAST({p} AS {c})"
+            for p, c in zip(parts, lit_casts)
+        ]
+        element = parts[0] if len(parts) == 1 else f"struct({', '.join(parts)})"
+        elements[element] = None
+    if not elements:
+        return "FALSE"
+    if len(probes) == 1:
+        probe = probes[0]
     else:
-        outside = F.lit(False)
-
-    names: list[str] = []
-    cols: list[Column] = []
-    for r in trefs:
-        vname = f"{r.table}__{r.name}" if full_feature_names else r.name
-        feature = spec.feature(r.name)
-        if feature is None or pruned is None:
-            # Requested but unregistered feature (ServingServiceBigTableIT
-            # .shouldReturnCorrectRowCount), or nothing materialized:
-            # NOT_FOUND for every row.
-            value = F.lit(None).cast(
-                "string" if feature is None else feature.value_type.to_spark()
-            )
-            status = F.lit(STATUS_NOT_FOUND)
-        else:
-            raw = F.col(f"__v__{table_name}__{r.name}")
-            value = F.when(found & ~outside, raw)
-            status = (
-                F.when(~found, F.lit(STATUS_NOT_FOUND))
-                .when(outside, F.lit(STATUS_OUTSIDE_MAX_AGE))
-                .when(raw.isNull(), F.lit(STATUS_NULL_VALUE))
-                .otherwise(F.lit(STATUS_PRESENT))
-            )
-        names.append(vname)
-        cols.append(value.alias(vname))
-        if include_statuses:
-            names.append(f"{vname}__status")
-            cols.append(status.alias(f"{vname}__status"))
-    return pruned, names, cols
-
-
-# Per-shape plans built on an online relation, keyed by that relation: a
-# new relation (re-materialize, pointer flip) starts with no plans, and a
-# relation's plans go when the relation cache drops it.
-_plans: "weakref.WeakKeyDictionary[DataFrame, dict]" = weakref.WeakKeyDictionary()
-_plans_lock = threading.Lock()
-_MAX_PLANS_PER_TABLE = 32
-
-
-def _cached_table_plan(
-    online: Optional[DataFrame],
-    table_name: str,
-    spec: FeatureTable,
-    trefs: Sequence[FeatureRef],
-    full_feature_names: bool,
-    include_statuses: bool,
-) -> tuple[Optional[DataFrame], list[str], list[Column]]:
-    """:func:`_table_plan`, reused while ``online`` is the same relation.
-
-    A local online table's relation comes from ``cached_relation``, which
-    returns a new one after a re-materialize, a pointer flip or a late
-    first materialize. Plans are keyed by the whole spec too, so a
-    re-applied spec is served without re-materializing. Caching plans
-    saves rebuilding the projection and Columns through py4j on every
-    request: measured about 100 ms of a 520 ms 10-row, two-table request
-    on 4 CPUs."""
-    if online is None:
-        return _table_plan(
-            None, table_name, spec, trefs, full_feature_names, include_statuses
-        )
-    # Every argument of _table_plan but the relation (the memo's key) and
-    # the table name (in the spec and the refs); the whole spec goes in
-    # through its repr so no field it reads can be left out of the key.
-    shape = (repr(spec), tuple(trefs), full_feature_names, include_statuses)
-    with _plans_lock:
-        plans = _plans.setdefault(online, {})
-        plan = plans.get(shape)
-    if plan is None:
-        plan = _table_plan(
-            online, table_name, spec, trefs, full_feature_names, include_statuses
-        )
-        with _plans_lock:
-            if len(plans) >= _MAX_PLANS_PER_TABLE:
-                plans.pop(next(iter(plans)))
-            plans[shape] = plan
-    return plan
+        # struct(...) of literals names its fields col1, col2, ...
+        probe = "struct(" + ", ".join(
+            f"{p} AS col{i}" for i, p in enumerate(probes, 1)
+        ) + ")"
+    return f"array_contains(array({', '.join(elements)}), {probe})"
 
 
 def get_online_features(
@@ -390,11 +388,18 @@ def get_online_features(
                     ).value_type.to_spark()
                 except KeyError:
                     pass
-        from pyspark.sql import types as _T
-
-        type_hints.setdefault("event_timestamp", _T.TimestampType())
+        type_hints.setdefault("event_timestamp", T.TimestampType())
 
     request = _entity_rows_df(spark, entity_rows, type_hints)
+    req_types = {f.name: f.dataType for f in request.schema.fields}
+    views: dict[str, DataFrame] = {}
+
+    def bind(df: DataFrame) -> str:
+        name = f"__online_{uuid.uuid4().hex}"
+        views[name] = df
+        return _quote(name)
+
+    req_view = bind(request)
 
     # Per-row request timestamp (J3 input). A row WITHOUT a timestamp
     # in a mixed batch (NULL after createDataFrame fill) falls back to
@@ -403,18 +408,13 @@ def get_online_features(
     # 366-368). Without the coalesce a NULL request time poisons the
     # max-age comparison into an inconsistent row (PRESENT status with
     # a nulled value).
-    fallback = (
-        F.lit(request_ts).cast("timestamp")
+    req_ts = (
+        f"CAST({_sql_literal(request_ts)} AS TIMESTAMP)"
         if request_ts is not None
-        else F.current_timestamp()
+        else "current_timestamp()"
     )
-    if "event_timestamp" in request.columns:
-        req_ts = F.coalesce(
-            F.col("event_timestamp").cast("timestamp"), fallback
-        )
-    else:
-        req_ts = fallback
-    request = request.withColumn("__req_ts", req_ts)
+    if "event_timestamp" in req_types:
+        req_ts = f"coalesce(CAST(`event_timestamp` AS TIMESTAMP), {req_ts})"
 
     # Group refs per table, preserving request order for output columns
     # (P1 projection; dedup of refs mirrors the reference's distinct()).
@@ -424,16 +424,19 @@ def get_online_features(
         if r not in by_table[r.table]:
             by_table[r.table].append(r)
 
-    out = request
-    out_names = list(request.columns)
+    # Output name -> SQL; a later table's same-named output replaces an
+    # earlier column.
+    exprs = {c: f"__r.{_quote(c)}" for c in req_types}
     value_cols: list[str] = []
+    joins: list[str] = []
+    hints: list[str] = []
 
-    for table_name, trefs in by_table.items():
+    for i, (table_name, trefs) in enumerate(by_table.items()):
         spec = specs.get(table_name) or registry.get_feature_table(
             table_name, project
         )
         keys = list(spec.entities)
-        missing = [k for k in keys if k not in request.columns]
+        missing = [k for k in keys if k not in req_types]
         if missing:
             raise ValueError(
                 f"entity rows missing join keys {missing} for table {table_name!r}"
@@ -462,47 +465,112 @@ def get_online_features(
             )
         else:
             online = None
-        pruned, names, cols = _cached_table_plan(
-            online, table_name, spec, trefs, full_feature_names, include_statuses
+
+        alias = f"__t{i}"
+        known = {
+            r.name: j
+            for j, r in enumerate(trefs)
+            if spec.feature(r.name) is not None
+        }
+        joined = online is not None and bool(known)
+        found = f"{alias}.`__ts` IS NOT NULL"
+        outside = _max_age_sql(
+            found, "__r.`__req_ts`", f"{alias}.`__ts`", spec.max_age_secs
         )
+        if joined:
+            # The pruned projection: keys, the row's time and each known
+            # feature, a stored value of another type than the declared
+            # one read as NULL (P5).
+            online_types = {f.name: f.dataType for f in online.schema.fields}
+            cols = [_quote(k) for k in keys] + ["`event_timestamp` AS `__ts`"]
+            for name, j in known.items():
+                declared = spec.feature(name).value_type.to_spark()
+                actual = online_types.get(name)
+                if actual is None:
+                    col = f"CAST(NULL AS {declared.simpleString()})"
+                elif actual == declared:
+                    col = _quote(name)
+                else:
+                    col = f"TRY_CAST({_quote(name)} AS {declared.simpleString()})"
+                cols.append(f"{col} AS `__v{j}`")
+            scan = f"SELECT {', '.join(cols)} FROM {bind(online)}"
 
-        joined = out
-        if pruned is not None and strategy == "shuffle":
-            # Backfill-scale requests (too large to broadcast): plain
-            # shuffled left join; AQE picks SMJ/SHJ and handles skew.
-            joined = out.join(pruned, on=keys, how="left")
-        elif pruned is not None:
-            # Join 1: distributed scan ⋈ broadcast request keys — the
-            # online table never shuffles. A semi join ignores duplicate
-            # build keys, so the keys need no distinct (and no shuffle).
-            matched = pruned.join(
-                F.broadcast(request.select(*keys)), on=keys, how="left_semi"
+            def on(left: str, right: str) -> str:
+                return " AND ".join(
+                    f"{left}.{_quote(k)} = {right}.{_quote(k)}" for k in keys
+                )
+
+            if local_rows:
+                # The key set rides inside the scan as one array literal.
+                scan += " WHERE " + _key_filter(
+                    entity_rows, keys, req_types, online_types
+                )
+            elif strategy == "broadcast":
+                # A DataFrame request's keys are not on the driver: a
+                # left semi join against them, their side broadcast (a
+                # semi join ignores duplicate build keys).
+                scan = (
+                    f"SELECT /*+ BROADCAST(__k) */ __s.* FROM ({scan}) AS __s"
+                    f" LEFT SEMI JOIN (SELECT {', '.join(map(_quote, keys))}"
+                    f" FROM {req_view}) AS __k ON {on('__s', '__k')}"
+                )
+            joins.append(
+                f" LEFT JOIN ({scan}) AS {alias} ON {on('__r', alias)}"
             )
-            # Join 2: request ⋈ broadcast matched rows (left BHJ, keeps
-            # all request rows so missing keys surface as NOT_FOUND).
-            joined = out.join(F.broadcast(matched), on=keys, how="left")
-        # One select per table: the columns so far (a same-named output
-        # column replaces an earlier one) plus this table's outputs; the
-        # projection's temporaries drop out here.
-        kept = [c for c in out_names if c not in names]
-        out = joined.select(*kept, *cols)
-        out_names = kept + names
-        value_cols += names
+            if strategy == "broadcast":
+                hints.append(f"BROADCAST({alias})")
 
-    entity_cols = [
-        c
-        for c in request.columns
-        if c not in (ROW_IDX, "__req_ts")
-    ]
+        for r in trefs:
+            vname = f"{r.table}__{r.name}" if full_feature_names else r.name
+            feature = spec.feature(r.name)
+            if feature is None or not joined:
+                # Requested but unregistered feature (ServingServiceBigTableIT
+                # .shouldReturnCorrectRowCount), or nothing materialized:
+                # NOT_FOUND for every row.
+                declared = "string" if feature is None else (
+                    feature.value_type.to_spark().simpleString()
+                )
+                value = f"CAST(NULL AS {declared})"
+                status = f"'{STATUS_NOT_FOUND}'"
+            else:
+                value, status = _feature_value_sql(
+                    found, outside, f"{alias}.`__v{known[r.name]}`"
+                )
+            outputs = [(vname, value)]
+            if include_statuses:
+                outputs.append((f"{vname}__status", status))
+            for name, sql in outputs:
+                exprs.pop(name, None)
+                exprs[name] = sql
+                value_cols.append(name)
+
+    entity_cols = [c for c in req_types if c not in (ROW_IDX, "__req_ts")]
+    select = ", ".join(
+        f"{exprs[c]} AS {_quote(c)}" for c in entity_cols + value_cols
+    )
+    order = ""
     if preserve_order:
         if local_rows and strategy == "broadcast":
-            # Every join above is a broadcast, so the rows arrive in
-            # however many partitions the request frame has: gather them
-            # into one and sort it locally instead of range-exchanging.
-            # Not for DataFrame requests: those can be large, and a
-            # shuffle-free coalesce(1) would run their whole plan in one
-            # task.
-            out = out.coalesce(1).sortWithinPartitions(ROW_IDX)
+            # Every join is a broadcast, so the rows arrive in however
+            # many partitions the request frame has: gather them into one
+            # and sort it locally instead of range-exchanging. Not for
+            # DataFrame requests: those can be large, and a shuffle-free
+            # COALESCE(1) would run their whole plan in one task.
+            hints.insert(0, "COALESCE(1)")
+            order = f" SORT BY __r.`{ROW_IDX}`"
         else:
-            out = out.orderBy(ROW_IDX)
-    return out.select(*entity_cols, *value_cols)
+            order = f" ORDER BY __r.`{ROW_IDX}`"
+    hint = f"/*+ {', '.join(hints)} */ " if hints else ""
+    text = (
+        f"SELECT {hint}{select} FROM"
+        f" (SELECT *, {req_ts} AS `__req_ts` FROM {req_view}) AS __r"
+        + "".join(joins)
+        + order
+    )
+    for name, df in views.items():
+        df.createOrReplaceTempView(name)
+    try:
+        return spark.sql(text)
+    finally:
+        for name in views:
+            spark.catalog.dropTempView(name)

@@ -166,7 +166,7 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        t0 = time.time()
+        t0 = time.perf_counter()
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as ex:
@@ -188,7 +188,7 @@ def main() -> int:
             print(f"FAIL  {name}: duckdb error: {str(ex)[:200]}")
             failures.append(name)
             continue
-        dt_s = time.time() - t0
+        dt_s = time.perf_counter() - t0
         problems = []
         ns = nonscalar_cols(sdf)
         if ns:

@@ -197,10 +197,11 @@ emit(
     "rest_online_features (controller retrieval plan)",
     "The serving REST route's underlying plan (the queries() entry is "
     "the eager HTTP scenario; this is what the controller executes): "
-    "the J1 double-BHJ — the online table is scanned and column-pruned, "
-    "NEVER shuffled; it is left-semi-joined against the broadcast request "
-    "keys, and the matched rows broadcast back into the left BHJ against "
-    "the request frame; "
+    "one SQL statement — the online table is scanned and column-pruned, "
+    "NEVER shuffled; the request keys ride inside the scan as one "
+    "array_contains(array(<literals>), c_custkey) filter, and the "
+    "filtered rows are the broadcast side of the left BHJ against the "
+    "request frame, gathered into one partition and sorted locally; "
     "the max_age staleness check is a pure projection. The response "
     "collect is bounded by the limit(max_rows+1) guard.",
     _ctl.retrieve(
@@ -217,8 +218,9 @@ emit(
 emit(
     "sdk_online_features (client-SDK serving plan)",
     "The FeastClient serve's underlying plan — identical to the REST "
-    "twin's J1 double-BHJ because the SDK is a pure consumer: refs are "
-    "validated client-side (RequestUtil), Rows become the same parsed "
+    "twin's single-statement plan because the SDK is a pure consumer: "
+    "refs are validated client-side (RequestUtil), Rows become the same "
+    "parsed "
     "entity-row frame, and the servicer calls the same "
     "controller.retrieve. Statuses ride as projections; nothing about "
     "the client changes the distributed shape.",

@@ -29,6 +29,7 @@ def run_bench(sf_dir: str) -> dict:
     runs = []
     detail = os.path.join(REPO, "BENCH_DETAIL.json")
     for _ in range(2):
+        # A timestamp, not a duration: compared with the detail file's mtime.
         start = time.time()
         env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
         proc = subprocess.run(
@@ -113,9 +114,12 @@ def composite(runs: list[dict]) -> dict:
 def main() -> None:
     results = {}
     for sf in SFS:
-        t0 = time.time()
+        t0 = time.perf_counter()
         results[sf] = run_bench(f"/root/testdata/{sf}")
-        print(f"{sf}: total {results[sf]['value']}s ({time.time()-t0:.0f}s wall)")
+        print(
+            f"{sf}: total {results[sf]['value']}s "
+            f"({time.perf_counter() - t0:.0f}s wall)"
+        )
 
     queries = list(results[SFS[-1]]["queries"].keys())
     out = io.StringIO()

@@ -280,3 +280,15 @@ def test_session_builder_sizes_from_the_host(monkeypatch):
     )._options
     assert opts["spark.master"] == "local[2]"
     assert opts["spark.driver.memory"] == "1g"
+
+
+def test_prior_only_from_a_same_host_baseline(tmp_path):
+    """A baseline frozen at another CPU count or scale factor yields no
+    prior: a 32-CPU baseline read by a 4-CPU run would flag queries that
+    are only slower for having fewer cores."""
+    path = tmp_path / "BENCH_BASELINE.json"
+    path.write_text(json.dumps({"sf": 0.1, "cpus": 32, "queries": {"q1": 1.0}}))
+    assert bench.same_host_prior(str(path), 0.1, 4) == {}
+    assert bench.same_host_prior(str(path), 0.01, 32) == {}
+    assert bench.same_host_prior(str(path), 0.1, 32) == {"q1": 1.0}
+    assert bench.same_host_prior(str(tmp_path / "missing.json"), 0.1, 32) == {}

@@ -7,6 +7,7 @@ import datetime as dt
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import types as T
 
 import feast_java_old_spark as fs
 from feast_java_old_spark.operators import get_online_features
@@ -187,3 +188,102 @@ def test_asof_join_matches_pure_python_oracle(
             assert gv is None
         else:
             assert gv == pytest.approx(wv)
+
+
+# ------------------------------------------- key rendering, every key type
+# Driver-side request keys reach the online scan as SQL literal text.
+# Every entity ValueType, and values that are hard to spell in SQL, must
+# find exactly the rows the pure-python oracle above finds.
+
+NAN = float("nan")
+INF = float("inf")
+
+KEY_CASES = {
+    # value type: (stored keys, requested keys that are not stored)
+    "INT64": ([0, -(1 << 63), (1 << 63) - 1, 7], [5, -1]),
+    "INT32": ([0, -(1 << 31), (1 << 31) - 1], [3]),
+    "DOUBLE": ([NAN, INF, -INF, 0.0, 1e300, 2.5, 5e-324], [3.5, -2.5]),
+    "FLOAT": ([1.5, NAN, INF, -INF, -0.0], [0.1, 2.5]),
+    "STRING": (
+        ["", "'", "\\", "`", "a\nb", "') OR TRUE --", "héllo ✓ 日本", "x"],
+        ["y", "' OR '1'='1", "\\'"],
+    ),
+    "BYTES": ([b"", b"\x00", b"a\x00b", b"'"], [b"\x01", b"\x00\x00"]),
+    "BOOL": ([True], [False]),
+    "INT64_LIST": ([[1, 2], [], [(1 << 63) - 1, -(1 << 63)]], [[2, 1], [1]]),
+    "INT32_LIST": ([[1], [-(1 << 31)]], [[2]]),
+    "DOUBLE_LIST": ([[1.5, -0.0], [INF]], [[2.5]]),
+    "FLOAT_LIST": ([[1.5], [-INF]], [[0.5]]),
+    "STRING_LIST": ([["'", "`"], [""]], [["a"], ["`", "'"]]),
+    "BYTES_LIST": ([[b"\x00"], []], [[b"a"]]),
+    "BOOL_LIST": ([[True, False]], [[False]]),
+}
+
+
+def _oracle_key(v):
+    """Hashable, with Spark's join equality: NaN equals NaN, -0.0 equals 0.0."""
+    if isinstance(v, list):
+        return tuple(_oracle_key(x) for x in v)
+    if isinstance(v, float) and v != v:
+        return "NaN"
+    return v
+
+
+@pytest.mark.parametrize("type_name", sorted(KEY_CASES))
+def test_request_keys_render_exactly_for_every_entity_type(spark, type_name):
+    vt = fs.ValueType[type_name]
+    stored, absent = KEY_CASES[type_name]
+    # Every stored key: a value, a NULL value, or a value older than max age.
+    history = {}
+    for i, k in enumerate(stored):
+        value = None if i % 3 == 1 else float(i)
+        history[(i, 10 if i % 3 == 2 else 100)] = value
+    online = spark.createDataFrame(
+        [(k, t(m), v) for (i, m), v in history.items() for k in [stored[i]]],
+        T.StructType(
+            [
+                T.StructField("k", vt.to_spark()),
+                T.StructField("event_timestamp", T.TimestampType()),
+                T.StructField("value", T.DoubleType()),
+            ]
+        ),
+    )
+    reg = fs.Registry()
+    reg.apply_entity(fs.Entity("k", vt))
+    reg.apply_feature_table(
+        fs.FeatureTable(
+            name="ft",
+            entities=["k"],
+            features=[fs.Feature("value", fs.ValueType.DOUBLE)],
+            max_age_secs=3600,
+            batch_source=FileSource(
+                file_url="/nonexistent", event_timestamp_column="event_timestamp"
+            ),
+        )
+    )
+    keys = [*stored, *absent, None, *reversed(stored)]
+    if type_name == "DOUBLE":
+        keys.append(-0.0)  # equals the stored 0.0
+    if type_name == "FLOAT":
+        keys.append(0.0)  # equals the stored -0.0
+    got = get_online_features(
+        spark,
+        reg,
+        [{"k": k, "we`ird 'col": i} for i, k in enumerate(keys)],
+        ["ft:value", "ft:no`pe'x"],
+        request_ts=REQ_TS,
+        online_frames={"ft": online},
+    ).collect()
+
+    index = {_oracle_key(k): i for i, k in enumerate(stored)}
+    oracle_history = {(i, m): v for (i, m), v in history.items()}
+    want = oracle(
+        oracle_history, [index.get(_oracle_key(k), -1) for k in keys], 3600
+    )
+    assert len(got) == len(keys)
+    for i, (g, (_, v, status)) in enumerate(zip(got, want)):
+        assert g["we`ird 'col"] == i
+        assert g["ft__value__status"] == status, (type_name, keys[i])
+        assert g["ft__value"] == v, (type_name, keys[i])
+        assert g["ft__no`pe'x"] is None
+        assert g["ft__no`pe'x__status"] == "NOT_FOUND"
