@@ -54,7 +54,10 @@ def test_design_envelope_all_broadcast(spark):
     )
 
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastHashJoin") >= 2 * N_TABLES
+    # one left BHJ per table; the request keys filter each table's scan
+    # as an array literal instead of a second (semi) broadcast join
+    assert plan.count("BroadcastHashJoin") == N_TABLES
+    assert plan.count("array_contains(") >= N_TABLES
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan
 
